@@ -24,7 +24,10 @@ Commit layout: ``commit()`` writes a FULL immutable version directory;
 (one small parquet with an ``op`` column — the tombstone/insert file
 pattern) and every ``compact_every``-th version materializes a full
 directory again, so reconstruction folds at most ``compact_every - 1``
-deltas over the nearest full base.  At 100 TB this is the difference
+deltas over the nearest full base.  ``open()`` replays those delta
+files through the store's own commit fold (``TripleStore.apply``), so
+a reopened delta version is the same base-plus-one-delta store an
+engine builds in memory.  At 100 TB this is the difference
 between a full rewrite per commit and writing kilobytes per commit:
 ``Transaction`` knows its exact delta from the engine's changeset
 tracking, so nothing is ever diffed against the base.  The pointer
@@ -42,27 +45,21 @@ import time
 from pyspark.sql import SparkSession
 
 from .sparql.engine import SparqlEngine
-from .store import TripleStore
+from .store import TripleStore, _under
 
 
 def _files_under(df, base: str) -> bool:
-    """True when every file the DataFrame's lineage reads lives under
-    ``base`` (checkpointed delta frames contribute no files).  Used as
-    the provenance guard for incremental compaction: a store whose
-    lineage reads only the base version IS fold(base, deltas)."""
-    def _norm(p: str) -> str:
-        if "://" in p and not p.startswith("file:"):
-            return p.rstrip("/")
-        return os.path.abspath(p.removeprefix("file:"))
-
+    """True when the DataFrame's lineage reads files and every one of
+    them lives under ``base`` (checkpointed delta frames contribute no
+    files).  Used as the provenance guard for incremental compaction: a
+    store whose lineage reads only the base version IS fold(base,
+    deltas).  A frame that reads NO files (a fully checkpointed or
+    in-memory store) proves nothing and fails the guard."""
     try:
-        b = _norm(base)
-        return all(
-            _norm(f) == b or _norm(f).startswith(b + "/")
-            for f in df.inputFiles()
-        )
+        files = df.inputFiles()
     except Exception:  # noqa: BLE001 — unknown lineage shape
         return False
+    return bool(files) and all(_under(f, base) for f in files)
 
 
 class CommitConflict(Exception):
@@ -256,9 +253,13 @@ class Journal:
 
     def open(self, version: int | None = None) -> TripleStore:
         """Snapshot read of a commit point (default: head).  Delta
-        versions reconstruct as (nearest full base \\ removes) ∪ adds
-        per delta, at most ``COMPACT_EVERY - 1`` folds."""
+        versions replay their delta files, at most ``COMPACT_EVERY - 1``,
+        over the nearest full base through the store's own commit fold
+        (``TripleStore.apply``: removes then adds, one delta-sized job
+        each), so the result is that base plus ONE delta frame."""
         from pyspark.sql import functions as F
+
+        from .operators import lifecycle as L
 
         v = self.head() if version is None else version
         if v == 0:
@@ -276,9 +277,17 @@ class Journal:
             if self._kind_of(d, kinds) == "empty":
                 continue
             delta = self.spark.read.parquet(self._ddir(d))
-            removes = delta.where(F.col("op") == 1).drop("op")
-            adds = delta.where(F.col("op") == 0).drop("op")
-            store = store.remove(removes).add(adds)
+            prev = store.delta
+            store = store.apply(
+                added=delta.where(F.col("op") == 0).drop("op"),
+                removed=delta.where(F.col("op") == 1).drop("op"),
+            )
+            # the fold materialized the new delta; the one it replaced
+            # is read by nothing this method returns
+            L.unprotect_and_free(prev)
+        # no engine owns the returned delta: it lives as long as the
+        # store that reads it (an engine frees only deltas it folded)
+        L.unprotect(store.delta)
         return store
 
     def commit(
@@ -592,11 +601,17 @@ class Journal:
             tasks = [_task_p] + [
                 _make_task(*lay) for lay in layouts
             ] + [_task_text]
+            from pyspark import inheritable_thread_target
+
             with ThreadPoolExecutor(max_workers=3) as pool:
-                for f in [pool.submit(t) for t in tasks]:
+                # inheritable_thread_target: the writes run under the
+                # caller's job group, so cancelling it cancels them
+                inherit = inheritable_thread_target(self.spark)
+                for f in [pool.submit(inherit(t)) for t in tasks]:
                     f.result()  # re-raise into the full-rewrite fallback
 
             out_meta = dict(meta)
+            out_meta.pop("rows", None)  # the base's count, not this version's
             out_meta["has_named"] = has_named
             out_meta["compaction"] = {
                 "mode": "incremental",
@@ -644,10 +659,10 @@ class Journal:
             if store is not None and new % self.COMPACT_EVERY == 0:
                 # a compaction of a layout-carrying store re-buckets all
                 # layouts (p/s/o/g) into fresh pruned parquet — the
-                # every-8th cadence that keeps the mutation-preserved
-                # layout views (store.add/remove unions) from deepening
-                # forever, the analog of the reference maintaining every
-                # index permutation across commits (SPORelation.java).
+                # journal's every-COMPACT_EVERY-th cadence that folds
+                # the store's delta back into a parquet base, the
+                # analog of the reference maintaining every index
+                # permutation across commits (SPORelation.java).
                 # Incremental first: clone untouched buckets from the
                 # base, rewrite only touched ones — O(delta), not
                 # O(store) (r11 verdict wrong #4); falls back to the
@@ -729,7 +744,7 @@ class Transaction:
 
     The engine's changeset tracking records each update's EXACT
     added/removed statements (checkpointed at delivery — small frames,
-    and holding raw lineage across the engine's own compaction would
+    and holding raw lineage across the engine's later commits would
     dangle on freed snapshots).  ``commit()`` folds them into one net
     (added, removed) pair — later removes cancel earlier adds and vice
     versa — and publishes it through :meth:`Journal.commit_delta`, so

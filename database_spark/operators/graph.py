@@ -472,6 +472,12 @@ def sssp(
     return L.adopt(dist.select("node", "dist"), owner)
 
 
+def _q(name: str) -> str:
+    """Backtick-quote a column name spliced into SQL text, so a tag
+    column named like a keyword (``order``) still parses."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def multi_sssp(
     edges: DataFrame,
     seeds: DataFrame,
@@ -540,9 +546,9 @@ def multi_sssp(
                 (n, sr, tag, float(d)) for n, d in _local_sssp(ers, one)
             ]
         spark = edges.sparkSession
-        cols = "node, seed" + (f", {dir_col}" if dir_col else "") + ", dist"
+        cols = "node, seed" + (f", {_q(dir_col)}" if dir_col else "") + ", dist"
         if not rows:
-            null_tag = f" CAST(NULL AS INT) {dir_col}," if dir_col else ""
+            null_tag = f" CAST(NULL AS INT) {_q(dir_col)}," if dir_col else ""
             return spark.sql(
                 "SELECT CAST(NULL AS BIGINT) node, CAST(NULL AS BIGINT) seed,"
                 f"{null_tag} CAST(NULL AS DOUBLE) dist WHERE FALSE"
@@ -583,12 +589,12 @@ def multi_sssp(
 
         # single-shuffle round keyed on the composite (node, seed[, tag])
         # state key, built as ONE SQL parse — see sssp() for the shape
-        keys_sql = ", ".join(key)
+        keys_sql = ", ".join(_q(c) for c in key)
         fkeys_sql = "e.__edst AS node, f.seed" + "".join(
-            f", f.{c}" for c in extra
+            f", f.{_q(c)}" for c in extra
         )
         on_sql = "f.node = e.__esrc" + "".join(
-            f" AND f.{c} = e.__e{c}" for c in extra
+            f" AND f.{_q(c)} = e.{_q('__e' + c)}" for c in extra
         )
 
         def step(dist, frontier, _round):

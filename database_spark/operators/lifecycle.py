@@ -1,7 +1,7 @@
 """Checkpoint lifecycle for iterative operators — two backends.
 
 Every fixpoint in this engine (property-path closure, GAS, RDFS
-closure), the mutation delta pin, and store/compaction snapshots
+closure), the store's commit delta, and rebuilt-base snapshots
 persist round state through :func:`checkpoint`.  Two backends:
 
 * **local** (default): ``df.localCheckpoint()`` — blocks live in the
@@ -63,7 +63,7 @@ _PROTECTED: set[int] = set()
 _PROTECTED_FILES: set[str] = set()
 #: serializes the before→after diff (persistent-RDD ids or checkpoint
 #: dirs) in :func:`checkpoint`.  Without it, two threads checkpointing
-#: concurrently (a writer's compaction + a tx view's changeset
+#: concurrently (a writer's commit fold + a tx view's changeset
 #: capture, as in the server soak) can each swallow the OTHER's new
 #: artifacts into their ownership set — a later free() of one then
 #: releases the other's data, killing every reader of that snapshot.
@@ -324,7 +324,7 @@ def free(*dfs) -> None:
 
     PROTECTED artifacts are skipped as a second line of defense: even
     if an ownership set was polluted, a session-lifetime artifact (a
-    store compaction snapshot) can only be freed via
+    store delta or base snapshot) can only be freed via
     :func:`unprotect_and_free`, which de-protects first."""
     for df in dfs:
         if df is None:
@@ -368,14 +368,21 @@ def protected_checkpoint(df: DataFrame) -> DataFrame:
     return protect(checkpoint(df))
 
 
+def unprotect(df):
+    """Undo :func:`protect`: the artifacts live until :func:`free` or
+    :func:`sweep` releases them, or (local backend) until the frame is
+    garbage collected and the context cleaner drops its blocks."""
+    if df is not None:
+        _PROTECTED.difference_update(getattr(df, _ATTR, ()))
+        _PROTECTED_FILES.difference_update(getattr(df, _FATTR, ()))
+    return df
+
+
 def unprotect_and_free(df) -> None:
     """Drop a previously protected checkpoint: un-exempt its artifacts
-    from :func:`sweep` and release them (store-compaction rotation)."""
-    if df is None:
-        return
-    _PROTECTED.difference_update(getattr(df, _ATTR, ()))
-    _PROTECTED_FILES.difference_update(getattr(df, _FATTR, ()))
-    free(df)
+    from :func:`sweep` and release them (store snapshot rotation)."""
+    if df is not None:
+        free(unprotect(df))
 
 
 def sweep(spark) -> int:

@@ -222,8 +222,8 @@ class SparqlEndpoint:
                 deadline_ms = None
                 # read_pin: the WHOLE request — compile, probes, and
                 # the streamed reply (chunked responses execute Spark
-                # jobs while sending) — pins the engine's compaction
-                # snapshot so a concurrent writer's compaction defers
+                # jobs while sending) — pins the engine's store
+                # snapshots so a concurrent writer's commit defers
                 # freeing the blocks this request's jobs read (the
                 # soak-test CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND race)
                 _pin = contextlib.ExitStack()
@@ -544,7 +544,7 @@ class SparqlEndpoint:
                     try:
                         # pin: the snapshot write executes Spark jobs
                         # over the store frame; a concurrent writer's
-                        # compaction must not free its blocks mid-write
+                        # commit must not free its blocks mid-write
                         with eng.read_pin():
                             body = endpoint.backup(
                                 eng, multi.get("file", ["backup.parquet"])[0]
@@ -1331,7 +1331,7 @@ class SparqlEndpoint:
         named by the ``fileOrDirs`` property into ``namespace``
         (auto-created when absent, like the reference), optionally into
         ``defaultGraph``.  All files land as LOAD ops inside ONE engine
-        commit — one changeset, one compaction tick — and bulk formats
+        commit — one changeset, one delta fold — and bulk formats
         take the distributed parse path.  ``quiet``/``verbose``/
         ``durableQueues``/``baseURI`` are accepted for protocol parity.
 
@@ -1399,7 +1399,7 @@ class SparqlEndpoint:
         is immutable, so the written snapshot is transactionally
         consistent even while concurrent updates land (they swap the
         engine's store pointer; they cannot mutate the frame being
-        written) — callers hold ``engine.read_pin()`` so compaction
+        written) — callers hold ``engine.read_pin()`` so a commit
         cannot free the frame's checkpoint blocks mid-write.  Refuses
         to overwrite (the reference requires the target not exist)."""
         import os

@@ -879,9 +879,14 @@ class Compiler:
             # driver calls them sequentially)
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark import inheritable_thread_target
+
+            # the pool threads inherit the caller's job group, so the
+            # query's cancellation and accounting cover these jobs
+            shared = inheritable_thread_target(self.spark)(self._materialize_shared)
             with ThreadPoolExecutor(max_workers=2) as pool:
-                fl = pool.submit(self._materialize_shared, left.df)
-                fr = pool.submit(self._materialize_shared, rdf)
+                fl = pool.submit(shared, left.df)
+                fr = pool.submit(shared, rdf)
                 left_src, rdf = fl.result(), fr.result()
         lbound = getattr(left_src, "_dbspark_rowbound", None)
         rbound = getattr(rdf, "_dbspark_rowbound", None)

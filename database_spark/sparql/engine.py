@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import terms as T
-from ..store import TripleStore
+from ..store import TripleStore, _key_match, _with_ids
 from . import ast as A
 from .compiler import Compiler, Sol
 from .parser import parse_query, parse_update
@@ -160,28 +160,36 @@ class SparqlEngine:
         self._change_listeners: list = []
         self._cs_added: list = []
         self._cs_removed: list = []
-        self._commits_since_compact = 0
-        self._compact_snapshot = None
+        #: protected snapshots this engine's commits created that its
+        #: store still reads (deltas, rebuilt bases); ``_commit``
+        #: retires the ones a new store no longer reads
+        self._owned: list = []
+        #: snapshots retired by the last commit — released by the next
+        #: one, so a changeset delivered lazily can still be read
+        self._retired: list = []
+        #: set when a commit replaced the store by a whole-store
+        #: rewrite (CLEAR, closure) rather than a delta fold
+        self._rewrote = False
         #: read-only transactions (TxServlet / ITransactionService
         #: analog): txid → {store, snap, reads_on, begun, view}.  Each
         #: tx pins the immutable store DataFrame current at begin time;
         #: snapshot isolation is free because stores are never mutated.
         self._tx: dict = {}
         self._tx_next = 1
-        #: compaction snapshots whose blocks could not be freed because
-        #: a transaction still reads on them (id(snap) → snap); freed
-        #: when the last pinning tx ends.
+        #: retired snapshots whose blocks could not be freed because a
+        #: transaction or a read still reads on them (id(snap) → snap);
+        #: freed when the last pin drops.
         self._deferred_snaps: dict = {}
         #: read pins: id(snap) → [snap, refcount] for reads currently
-        #: executing against a compaction snapshot (see read_pin) —
-        #: compaction defers freeing a read-pinned snapshot exactly
-        #: like a tx-pinned one
+        #: executing against a store snapshot (see read_pin) — a commit
+        #: defers freeing a read-pinned snapshot exactly like a
+        #: tx-pinned one
         self._read_pins: dict = {}
-        #: set on tx views: (owner engine, pinned snap) so read_pin on
-        #: a view protects the tx's snapshot in the OWNER's registry
+        #: set on tx views: (owner engine, pinned snaps) so read_pin on
+        #: a view protects the tx's snapshots in the OWNER's registry
         self._read_pin_target: "tuple | None" = None
         #: count of in-flight unisolated reads (read_pin on the engine
-        #: itself, not a tx view).  While > 0, NO compaction snapshot is
+        #: itself, not a tx view).  While > 0, NO store snapshot is
         #: freed: a long read (chunked response streaming for minutes)
         #: may start later queries whose plans root at snapshots created
         #: AFTER its pin, so only the specific pinned snapshot being
@@ -243,13 +251,7 @@ class SparqlEngine:
             F.col("o").alias("__co"),
             F.col("g").alias("__cg"),
         ).dropDuplicates()
-        cond = (
-            (F.col("s") == F.col("__cs"))
-            & (F.col("p") == F.col("__cp"))
-            & (F.col("o") == F.col("__co"))
-            & F.col("g").eqNullSafe(F.col("__cg"))
-        )
-        return big.join(k, cond, "left_anti" if anti else "left_semi")
+        return big.join(k, _key_match("__c"), "left_anti" if anti else "left_semi")
 
     def _cs_track(self, added: DataFrame | None = None, removed: DataFrame | None = None) -> None:
         if added is not None:
@@ -514,9 +516,13 @@ class SparqlEngine:
             L.adopt(out, *c._owned)
         return out
 
-    def _instantiate(self, sol: Sol, template: list, graph: T.Term | None = None) -> DataFrame:
+    def _instantiate(
+        self, sol: Sol, template: list, graph: T.Term | None = None,
+        distinct: bool = True,
+    ) -> DataFrame:
         """Template instantiation (ASTConstructIterator): one select per
-        template triple, union, validity filter, distinct."""
+        template triple, union, validity filter, distinct (skipped with
+        ``distinct=False`` for a store write, whose fold dedups)."""
         outs = []
         for tp in template:
             cols = []
@@ -544,6 +550,8 @@ class SparqlEngine:
             u = u.withColumn("gt", T.lit_term(graph))
         else:
             u = u.withColumn("gt", F.lit(None).cast(T.TERM_TYPE))
+        if not distinct:
+            return u
         u = u.withColumn("__sid", T.term_id(F.col("st"))).withColumn(
             "__pid", T.term_id(F.col("pt"))
         ).withColumn("__oid", T.term_id(F.col("ot")))
@@ -743,19 +751,11 @@ class SparqlEngine:
         bookkeeping — the LoadUpdate path minus the file read.  Used by
         bulk loaders (blueprints ``BigdataGraphBulkLoad`` analog); the
         frame is never enumerated on the driver."""
-        self._assert_writable()
-        self._cs_added, self._cs_removed = [], []
         if graph is not None:
             df = df.withColumn("gt", T.lit_term(graph))
-        if self._track_changes:
-            self._track_insert(df, self.store.df)
-        self.store = self.store.add(df, other_has_named=graph is not None)
-        self._backchain_maps = None
-        self._describe_cache_invalidate()
-        if self.maintain_entailments:
-            self._recompute_entailments()
-        self._fire_changeset()
-        self._maybe_compact()
+        with self._commit_scope():
+            self._write(added=df, added_has_named=graph is not None)
+            self._after_write()
 
     @_serialized
     def remove_dataframe(self, df: DataFrame) -> None:
@@ -764,197 +764,164 @@ class SparqlEngine:
         set-oriented half of DeleteServlet (blueprints removeVertex
         uses it to drop a vertex plus all incident edge state in one
         commit)."""
-        self._assert_writable()
-        self._cs_added, self._cs_removed = [], []
         if "gt" not in df.columns:
             df = df.withColumn("gt", F.lit(None).cast(T.TERM_TYPE))
-        if self._track_changes:
-            self._track_delete(df, self.store.df)
-        self.store = self.store.remove(df.select("st", "pt", "ot", "gt"))
-        self._backchain_maps = None
-        self._describe_cache_invalidate()
-        if self.maintain_entailments:
-            if self._tm_justs is not None:
-                self._tm_retract(df.where(F.col("gt").isNull()).select("st", "pt", "ot"))
-            else:
-                self._recompute_entailments()
-        self._fire_changeset()
-        self._maybe_compact()
+        with self._commit_scope():
+            self._write(removed=df.select("st", "pt", "ot", "gt"))
+            self._after_write(df.where(F.col("gt").isNull()).select("st", "pt", "ot"))
 
     @_serialized
     def _run_update_ops(self, ops: list) -> None:
+        with self._commit_scope():
+            for op in ops:
+                self._update_one(op)
+                if isinstance(op, A.DeleteData):
+                    # a default-graph-only delete retracts by justification
+                    by_just = self._tm_justs is not None and all(
+                        q[3] is None for q in op.triples
+                    )
+                    self._after_write(self._quads_df(op.triples) if by_just else None)
+                elif isinstance(op, (
+                    A.InsertData, A.Modify, A.LoadUpdate, A.ClearUpdate, A.DropUpdate, A.CopyMoveAdd
+                )):
+                    self._after_write()
+
+    @contextlib.contextmanager
+    def _commit_scope(self):
+        """ONE commit around its writes: a fresh changeset, then (unless
+        the writes raised) its delivery and :meth:`_commit`."""
         self._assert_writable()
         self._cs_added, self._cs_removed = [], []
-        for op in ops:
-            mutates = isinstance(
-                op, (A.InsertData, A.DeleteData, A.Modify, A.LoadUpdate, A.ClearUpdate, A.DropUpdate, A.CopyMoveAdd)
-            )
-            self._update_one(op)
-            if mutates:
-                # the memoized sub-class/sub-property closure may now be
-                # stale (e.g. an inserted rdfs:subClassOf edge)
-                self._backchain_maps = None
-                self._describe_cache_invalidate()
-            if self.maintain_entailments and mutates:
-                if (
-                    isinstance(op, A.DeleteData)
-                    and self._tm_justs is not None
-                    and all(q[3] is None for q in op.triples)
-                ):
-                    # justification-based retraction (DRed over the
-                    # JUST table): cost scales with the affected cone,
-                    # not the closure — no rule re-evaluation
-                    self._tm_retract(self._quads_df(op.triples))
-                else:
-                    self._recompute_entailments()
+        yield
         self._fire_changeset()
-        self._maybe_compact()
+        self._commit()
 
-    #: commits between store-lineage compactions (see _maybe_compact)
-    _COMPACT_EVERY = 8
-
-    def _maybe_compact(self) -> None:
-        """Bound store lineage depth across commits.
-
-        Every mutation stacks `union + dropDuplicates` onto the store
-        plan; a CRUD-style workload (blueprints/GOM veneers, REST
-        endpoints issuing many small updates) would otherwise make
-        every later read re-execute the whole mutation history —
-        quadratic in commit count.  Every ``_COMPACT_EVERY`` commits the
-        store is localCheckpoint'ed (the journal commit-record analog:
-        reads start from a materialized snapshot, like the reference's
-        B+Tree after a commit point) and the PREVIOUS snapshot's blocks
-        are released.  Contract: changeset deltas are delivered before
-        the commit returns and must be consumed before the next batch
-        of commits (IChangeLog has the same in-commit delivery shape);
-        only the current snapshot is ever live storage."""
-        from ..operators import lifecycle as L
-
-        self._commit_count += 1
-        self._commits_since_compact += 1
-        if self._commits_since_compact < self._COMPACT_EVERY:
+    def _after_write(self, retracted: DataFrame | None = None) -> None:
+        """Drop what a write may stale (the memoized sub-class/
+        sub-property closure, e.g. after an inserted rdfs:subClassOf
+        edge; the DESCRIBE cache) and keep the entailments.  A
+        default-graph ``retracted`` frame takes justification-based
+        retraction (DRed over the JUST table: cost scales with the
+        affected cone, no rule re-evaluation); anything else
+        recomputes the closure."""
+        self._backchain_maps = None
+        self._describe_cache_invalidate()
+        if not self.maintain_entailments:
             return
-        self._commits_since_compact = 0
-        prev = self._compact_snapshot
-        st = self.store
-        snap = L.protected_checkpoint(st.df)
-        # keep the layout FAMILY across compaction: the aux layouts are
-        # derived VIEWS of the one snapshot (bucket column recomputed —
-        # no extra storage; a checkpointed store has no parquet
-        # partitions left to prune anyway), so the compiler's
-        # p-/s-/o-layout paths stay live and the next full save()
-        # re-materializes them as pruned parquet.  Checkpointing three
-        # copies would triple block-manager storage for zero pruning.
-        flat = snap.drop("p_bucket") if "p_bucket" in snap.columns else snap
-        self.store = TripleStore(
-            st.spark,
-            snap,
-            has_named=st.has_named,
-            p_buckets=st.p_buckets if "p_bucket" in snap.columns else None,
-            s_df=(
-                flat.withColumn(
-                    "s_bucket", F.pmod(F.col("s"), F.lit(st.s_buckets))
-                )
-                if st.s_df is not None and st.s_buckets
-                else None
-            ),
-            s_buckets=st.s_buckets if st.s_df is not None else None,
-            o_df=(
-                flat.withColumn(
-                    "o_bucket", F.pmod(F.col("o"), F.lit(st.o_buckets))
-                )
-                if st.o_df is not None and st.o_buckets
-                else None
-            ),
-            o_buckets=st.o_buckets if st.o_df is not None else None,
-            g_df=(
-                flat.where(F.col("g").isNotNull()).withColumn(
-                    "g_bucket", F.pmod(F.col("g"), F.lit(st.g_buckets))
-                )
-                if st.g_df is not None and st.g_buckets
-                else None
-            ),
-            g_buckets=st.g_buckets if st.g_df is not None else None,
-        )
-        self._compact_snapshot = snap
-        if prev is not None and (
-            self._snap_pinned(prev)
-            or id(prev) in self._read_pins
-            or self._active_reads > 0
-        ):
-            # a read-only tx — or an in-flight read (read_pin) — still
-            # reads on this snapshot: freeing it would kill their jobs
-            # with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.  Defer until the
-            # last pin drops (end_tx / read_pin exit frees it).
-            self._deferred_snaps[id(prev)] = prev
+        if retracted is not None and self._tm_justs is not None:
+            self._tm_retract(retracted)
         else:
-            L.unprotect_and_free(prev)
+            self._recompute_entailments()
+
+    def _apply(self, added=None, removed=None, added_has_named=None) -> None:
+        """Fold one write step into the store's delta (one delta-sized
+        job, see ``TripleStore.apply``) and own the new delta."""
+        self.store = self.store.apply(added, removed, added_has_named)
+        d = self.store.delta
+        if d is not None and all(d is not f for f in self._owned):
+            self._owned.append(d)
+
+    def _write(self, added=None, removed=None, added_has_named=None) -> None:
+        """:meth:`_apply` plus changeset tracking: ``removed`` reports
+        the statements it finds, ``added`` the ones absent once the
+        removes landed (removes apply first, so remove-then-add of one
+        statement reports both; only actually-written statements
+        notify, like the reference's index-write check)."""
+        if self._track_changes:
+            before = self.store.df
+            if removed is not None:
+                rm = _with_ids(removed)
+                self._cs_track(removed=self._stmt_join(before, rm))
+                before = self._stmt_join(before, rm, anti=True)
+            if added is not None:
+                cand = _with_ids(added)
+                existing = self._stmt_join(before, cand)  # one store scan
+                self._cs_track(added=self._stmt_join(cand, existing, anti=True))
+        self._apply(added, removed, added_has_named)
+
+    def _rewrite(self, store: TripleStore) -> None:
+        """Replace the store by a whole-store rewrite (CLEAR, closure):
+        its lineage may read this engine's snapshots, so the commit
+        rebuilds the base before it retires them."""
+        self.store = store
+        self._rewrote = True
+        self._owned.extend(f for f in store.snaps if all(f is not o for o in self._owned))
+
+    def _commit(self) -> None:
+        """Close one commit.  The base is rebuilt (one protected
+        checkpoint, ``TripleStore.rebuilt``) only when the delta
+        outgrew its bound, or when a rewrite left the store reading
+        this engine's snapshots through lineage.  Snapshots the new
+        store no longer reads are retired, and released one commit
+        later: changeset deltas are delivered before the commit returns
+        and must be consumed before the next commit (IChangeLog has the
+        same in-commit delivery shape).  A released snapshot a tx or an
+        in-flight read still pins is deferred until the last pin
+        drops."""
+        self._commit_count += 1
+        st = self.store
+        if (self._rewrote and self._owned) or st.delta_outgrew_base():
+            self.store = st = st.rebuilt()
+            self._owned.extend(st.snaps)
+        self._rewrote = False
+        live = {id(f) for f in st.snaps}
+        retired = [f for f in self._owned if id(f) not in live]
+        self._owned = [f for f in self._owned if id(f) in live]
+        for f in self._retired:
+            # deferred while pinned: freeing under a reader would kill
+            # its jobs with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+            self._deferred_snaps[id(f)] = f
+            self._free_if_unpinned(f)
+        self._retired = retired
 
     @_serialized
     def apply_changeset(self, added=None, removed=None) -> None:
         """Retract ``removed`` and assert ``added`` (term-struct
         statement frames, disjoint) in ONE commit with full
-        bookkeeping — one changeset delivered, one compaction tick.
-        The set-oriented retract-and-assert primitive behind read-write
+        bookkeeping — one fold, one changeset delivered.  The
+        set-oriented retract-and-assert primitive behind read-write
         transaction publication (reference: a tx's write set lands as
         one unisolated commit)."""
-        self._assert_writable()
-        self._cs_added, self._cs_removed = [], []
-        before = self.store.df
-        if removed is not None:
-            if "gt" not in removed.columns:
-                removed = removed.withColumn("gt", F.lit(None).cast(T.TERM_TYPE))
-            if self._track_changes:
-                self._track_delete(removed, before)
-            self.store = self.store.remove(removed.select("st", "pt", "ot", "gt"))
-        if added is not None:
-            if self._track_changes:
-                self._track_insert(added, before)
-            self.store = self.store.add(added)
-        self._backchain_maps = None
-        self._describe_cache_invalidate()
-        if self.maintain_entailments:
-            self._recompute_entailments()
-        self._fire_changeset()
-        self._maybe_compact()
+        if removed is not None and "gt" not in removed.columns:
+            removed = removed.withColumn("gt", F.lit(None).cast(T.TERM_TYPE))
+        with self._commit_scope():
+            self._write(
+                added,
+                None if removed is None else removed.select("st", "pt", "ot", "gt"),
+            )
+            self._after_write()
 
     # ------------------------------------------------ read pinning
     @contextlib.contextmanager
     def read_pin(self):
-        """Pin the snapshot this engine's reads start from, so a
-        concurrent writer's compaction cannot free its checkpoint
-        blocks mid-read.
+        """Pin the snapshots this engine's reads start from, so a
+        concurrent writer's commit cannot free their checkpoint blocks
+        mid-read.
 
         The reference holds the journal's read lock for the duration
         of every read; this is the Spark-lifecycle analog.  Without
         it, a query (or a chunked response streaming for minutes)
-        whose plan references compaction snapshot S dies with
-        CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND the moment 8 more commits
-        land and compaction frees S — found mechanically by the
-        concurrency soak test.  Wrap the WHOLE read (compile through
-        last-row materialization).  No-op when there is no snapshot
-        yet; on a tx view it pins the tx's snapshot in the owner
-        engine's registry (a COMMIT/ABORT ending the tx mid-stream
-        defers the free instead of orphaning the reader)."""
+        whose plan references delta snapshot S dies with
+        CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND once later commits retire
+        and free S — found mechanically by the concurrency soak test.
+        Wrap the WHOLE read (compile through last-row
+        materialization).  On a tx view it pins the tx's snapshots in
+        the owner engine's registry (a COMMIT/ABORT ending the tx
+        mid-stream defers the free instead of orphaning the reader)."""
         is_tx_view = self._read_pin_target is not None
         owner = self._read_pin_target[0] if is_tx_view else self
-        # Resolve the snapshot INSIDE the owner's write lock: compaction
-        # runs under the same lock, so it cannot swap _compact_snapshot
-        # and free the one we captured between capture and registration
-        # (advice r8 — the old outside-the-lock read left a narrow
-        # window where the reader pinned an already-freed snapshot).
+        # Resolve the snapshots INSIDE the owner's write lock: commits
+        # run under the same lock, so one cannot swap the store and
+        # free what we captured between capture and registration
+        # (advice r8).
         with owner._write_lock:
-            snap = (
-                self._read_pin_target[1]
-                if is_tx_view
-                else owner._compact_snapshot
-            )
+            snaps = self._read_pin_target[1] if is_tx_view else owner.store.snaps
             if not is_tx_view:
                 # unisolated read: later queries inside the pin read
                 # owner.store LIVE, so they may root at snapshots newer
-                # than `snap` — block ALL frees while we're in flight
+                # than `snaps` — block ALL frees while we're in flight
                 owner._active_reads += 1
-            if snap is not None:
+            for snap in snaps:
                 ent = owner._read_pins.setdefault(id(snap), [snap, 0])
                 ent[1] += 1
         try:
@@ -963,7 +930,7 @@ class SparqlEngine:
             with owner._write_lock:
                 if not is_tx_view:
                     owner._active_reads -= 1
-                if snap is not None:
+                for snap in snaps:
                     ent = owner._read_pins.get(id(snap))
                     if ent is not None:
                         ent[1] -= 1
@@ -971,20 +938,20 @@ class SparqlEngine:
                             owner._read_pins.pop(id(snap), None)
                 if owner._active_reads <= 0:
                     owner._sweep_deferred()
-                elif snap is not None:
-                    owner._free_if_unpinned(snap)
+                else:
+                    for snap in snaps:
+                        owner._free_if_unpinned(snap)
 
     def _free_if_unpinned(self, snap) -> None:
-        """Free a DEFERRED compaction snapshot once nothing pins it
-        (no tx reads on it, no in-flight read_pin) AND no unisolated
-        read is in flight — an active reader's next query may root at
-        any snapshot created since its pin, so frees wait for quiesce
+        """Free a DEFERRED snapshot once nothing pins it (no tx reads
+        on it, no in-flight read_pin) AND no unisolated read is in
+        flight — an active reader's next query may root at any
+        snapshot created since its pin, so frees wait for quiesce
         (swept by the last read_pin exit)."""
         from ..operators import lifecycle as L
 
         if (
-            snap is not None
-            and id(snap) in self._deferred_snaps
+            id(snap) in self._deferred_snaps
             and self._active_reads <= 0
             and not self._snap_pinned(snap)
             and id(snap) not in self._read_pins
@@ -994,18 +961,12 @@ class SparqlEngine:
     def _sweep_deferred(self) -> None:
         """Free every deferred snapshot nothing pins (called under the
         write lock when the last in-flight read exits)."""
-        from ..operators import lifecycle as L
-
-        for sid in list(self._deferred_snaps):
-            snap = self._deferred_snaps[sid]
-            if not self._snap_pinned(snap) and sid not in self._read_pins:
-                L.unprotect_and_free(self._deferred_snaps.pop(sid))
+        for snap in list(self._deferred_snaps.values()):
+            self._free_if_unpinned(snap)
 
     # ------------------------------------------------ transactions
     def _snap_pinned(self, snap) -> bool:
-        return snap is not None and any(
-            t["snap"] is snap for t in self._tx.values()
-        )
+        return any(s is snap for t in self._tx.values() for s in t["snaps"])
 
     def _assert_writable(self) -> None:
         if self._read_only:
@@ -1021,11 +982,11 @@ class SparqlEngine:
         ``ITransactionService.newTx`` with a read-historical
         timestamp).  The tx sees exactly the store as of this commit —
         later mutations are invisible — because store DataFrames are
-        immutable; the only bookkeeping is keeping the compaction
-        lifecycle from freeing a snapshot the tx's lineage needs.
+        immutable; the only bookkeeping is keeping later commits from
+        freeing a snapshot the tx's lineage needs.
 
         Serialized: registration must be atomic with respect to
-        ``_maybe_compact``'s pin scan (a concurrent writer could
+        ``_commit``'s pin scan (a concurrent writer could
         otherwise free the snapshot between our store read and the
         ``self._tx`` insert) and ``_tx_next`` must not mint duplicate
         txids under ThreadingHTTPServer concurrency."""
@@ -1033,7 +994,7 @@ class SparqlEngine:
         self._tx_next += 1
         self._tx[txid] = {
             "store": self.store,
-            "snap": self._compact_snapshot,
+            "snaps": self.store.snaps,
             "reads_on": self._commit_count,
             "begun": time.time(),
             "view": None,
@@ -1050,7 +1011,7 @@ class SparqlEngine:
                 t["store"], services=self.services, backchain=self.backchain
             )
             view._read_only = True
-            view._read_pin_target = (self, t["snap"])
+            view._read_pin_target = (self, t["snaps"])
             t["view"] = view
         return t["view"]
 
@@ -1080,7 +1041,7 @@ class SparqlEngine:
         view = SparqlEngine(
             t["store"], services=self.services, backchain=self.backchain
         )
-        view._read_pin_target = (self, t["snap"])
+        view._read_pin_target = (self, t["snaps"])
         t["view"], t["writable"], t["staged"] = view, True, []
 
         def _capture(cs, staged=t["staged"]):
@@ -1128,16 +1089,17 @@ class SparqlEngine:
     def end_tx(self, txid: int) -> None:
         """ABORT-TX (and the read-only COMMIT, which is identical — a
         read-only commit just releases the read lock): drop the pin,
-        discard any staged writes, free any compaction snapshot whose
+        discard any staged writes, free any store snapshot whose
         release was deferred while this tx read on it.  Serialized so
         the pop + deferred-snapshot free cannot interleave with a
-        writer's compaction pin scan (RLock: ``commit_tx`` re-enters)."""
+        writer's commit pin scan (RLock: ``commit_tx`` re-enters)."""
         from ..operators import lifecycle as L
 
         t = self._tx.pop(txid)
         for a, r in t.get("staged") or []:
             L.free(a, r)
-        self._free_if_unpinned(t["snap"])
+        for snap in t["snaps"]:
+            self._free_if_unpinned(snap)
 
     def _fire_changeset(self) -> None:
         """Deliver the accumulated commit delta to subscribers
@@ -1187,21 +1149,10 @@ class SparqlEngine:
         commit bookkeeping: the matching set stays a DataFrame end to
         end (never driver-enumerated), truth maintenance retracts
         consequences, and change listeners get the exact delta."""
-        self._assert_writable()
-        self._cs_added, self._cs_removed = [], []
-        matches = self._pattern_matches(s, p, o, g, from_all_graphs)
-        if self._track_changes:
-            self._cs_track(removed=matches)
-        self.store = self.store.remove(matches.select("st", "pt", "ot", "gt"))
-        self._backchain_maps = None
-        self._describe_cache_invalidate()
-        if self.maintain_entailments:
-            if self._tm_justs is not None and g is None and not from_all_graphs:
-                self._tm_retract(matches.select("st", "pt", "ot"))
-            else:
-                self._recompute_entailments()
-        self._fire_changeset()
-        self._maybe_compact()
+        with self._commit_scope():
+            matches = self._remove_matches(self._pattern_matches(s, p, o, g, from_all_graphs))
+            default = g is None and not from_all_graphs
+            self._after_write(matches.select("st", "pt", "ot") if default else None)
 
     @_serialized
     def replace_pattern(
@@ -1221,20 +1172,11 @@ class SparqlEngine:
         (bigdata-blueprints ``BigdataElement.setProperty`` retracts the
         old values and asserts the new one before the one commit), so a
         failure can never land between the retract and the assert."""
-        self._assert_writable()
-        self._cs_added, self._cs_removed = [], []
-        matches = self._pattern_matches(s, p, o, g, from_all_graphs)
-        if self._track_changes:
-            self._cs_track(removed=matches)
-        self.store = self.store.remove(matches.select("st", "pt", "ot", "gt"))
-        if inserts:
-            self._update_one(A.InsertData(triples=list(inserts)))
-        self._backchain_maps = None
-        self._describe_cache_invalidate()
-        if self.maintain_entailments:
-            self._recompute_entailments()
-        self._fire_changeset()
-        self._maybe_compact()
+        with self._commit_scope():
+            self._remove_matches(self._pattern_matches(s, p, o, g, from_all_graphs))
+            if inserts:
+                self._update_one(A.InsertData(triples=list(inserts)))
+            self._after_write()
 
     @_serialized
     def remove_triples_all_graphs(self, df: DataFrame) -> None:
@@ -1246,42 +1188,40 @@ class SparqlEngine:
         ``removeStatements``.  The triple set stays distributed: a
         semi-join on term ids picks the store rows, never a driver
         enumeration."""
-        self._assert_writable()
-        self._cs_added, self._cs_removed = [], []
         keys = df.select(
             T.term_id(F.col("st")).alias("__ks"),
             T.term_id(F.col("pt")).alias("__kp"),
             T.term_id(F.col("ot")).alias("__ko"),
         ).dropDuplicates()
-        matches = self.store.df.join(
-            keys,
-            (F.col("s") == F.col("__ks"))
-            & (F.col("p") == F.col("__kp"))
-            & (F.col("o") == F.col("__ko")),
-            "left_semi",
-        )
+        with self._commit_scope():
+            self._remove_matches(self.store.df.join(
+                keys,
+                (F.col("s") == F.col("__ks"))
+                & (F.col("p") == F.col("__kp"))
+                & (F.col("o") == F.col("__ko")),
+                "left_semi",
+            ))
+            self._after_write()
+
+    def _remove_matches(self, matches: DataFrame) -> DataFrame:
+        """Remove store rows ``matches`` selected (so they are exactly
+        the changeset's removes); returns ``matches``."""
         if self._track_changes:
             self._cs_track(removed=matches)
-        self.store = self.store.remove(matches.select("st", "pt", "ot", "gt"))
-        self._backchain_maps = None
-        self._describe_cache_invalidate()
-        if self.maintain_entailments:
-            self._recompute_entailments()
-        self._fire_changeset()
-        self._maybe_compact()
+        self._apply(removed=matches.select("st", "pt", "ot", "gt"))
+        return matches
 
     def _tm_retract(self, deleted) -> None:
         from ..inference.rdfs import tm_retract
 
         if self._track_changes:
-            self.store, self._tm_justs, (tm_add, tm_rm) = tm_retract(
+            store, self._tm_justs, (tm_add, tm_rm) = tm_retract(
                 self.store, self._tm_justs, deleted, with_delta=True
             )
             self._cs_track(added=tm_add, removed=tm_rm)
         else:
-            self.store, self._tm_justs = tm_retract(
-                self.store, self._tm_justs, deleted
-            )
+            store, self._tm_justs = tm_retract(self.store, self._tm_justs, deleted)
+        self._rewrite(store)
 
     def _recompute_entailments(self) -> None:
         """Re-derive the closure from the current explicit statements,
@@ -1297,9 +1237,8 @@ class SparqlEngine:
             # O(closure), same order as the recompute itself
             before_inf = self.store.df.where(F.col("inferred") != EXPLICIT)
         explicit = TS(self.store.spark, self.store.explicit())
-        self.store, self._tm_justs = rdfs_closure(
-            explicit, with_justifications=True
-        )
+        store, self._tm_justs = rdfs_closure(explicit, with_justifications=True)
+        self._rewrite(store)
         if before_inf is not None:
             after_inf = self.store.df.where(F.col("inferred") != EXPLICIT)
             self._cs_track(
@@ -1307,36 +1246,16 @@ class SparqlEngine:
                 removed=self._stmt_join(before_inf, after_inf, anti=True),
             )
 
-    def _track_insert(self, cand: DataFrame, before: DataFrame) -> None:
-        """added = candidates not already present (only actually-written
-        statements notify, like the reference's index-write check)."""
-        from ..store import _with_ids
-
-        cand = _with_ids(cand)
-        existing = self._stmt_join(before, cand)  # one store scan
-        self._cs_track(added=self._stmt_join(cand, existing, anti=True))
-
-    def _track_delete(self, cand: DataFrame, before: DataFrame) -> None:
-        from ..store import _with_ids
-
-        self._cs_track(removed=self._stmt_join(before, _with_ids(cand)))
-
     def _update_one(self, op) -> None:
         spark = self.store.spark
         track = self._track_changes
         if isinstance(op, A.InsertData):
-            qdf = self._quads_df(op.triples)
-            if track:
-                self._track_insert(qdf, self.store.df)
-            self.store = self.store.add(
-                qdf,
-                other_has_named=any(q[3] is not None for q in op.triples),
+            self._write(
+                added=self._quads_df(op.triples),
+                added_has_named=any(q[3] is not None for q in op.triples),
             )
         elif isinstance(op, A.DeleteData):
-            qdf = self._quads_df(op.triples)
-            if track:
-                self._track_delete(qdf, self.store.df)
-            self.store = self.store.remove(qdf)
+            self._write(removed=self._quads_df(op.triples))
         elif isinstance(op, A.Modify):
             g = op.with_graph
             if op.using:
@@ -1357,16 +1276,18 @@ class SparqlEngine:
                 from ..operators import lifecycle as L
 
                 L.free(*c._owned)
-            if op.delete_templates:
-                dels = self._instantiate(sol, op.delete_templates, g)
-                if track:
-                    self._track_delete(dels, self.store.df)
-                self.store = self.store.remove(dels)
-            if op.insert_templates:
-                ins = self._instantiate(sol, op.insert_templates, g)
-                if track:
-                    self._track_insert(ins, self.store.df)
-                self.store = self.store.add(ins, other_has_named=g is not None)
+            # deletes then inserts (SPARQL 1.1 Update §3.1.3), as ONE
+            # fold; the fold dedups, a changeset needs distinct rows
+            def inst(templates):
+                if not templates:
+                    return None
+                return self._instantiate(sol, templates, g, distinct=track)
+
+            self._write(
+                added=inst(op.insert_templates),
+                removed=inst(op.delete_templates),
+                added_has_named=g is not None,
+            )
         elif isinstance(op, A.LoadUpdate):
             from ..rio.reader import read_rdf
 
@@ -1376,9 +1297,7 @@ class SparqlEngine:
             df = read_rdf(spark, path)
             if op.graph is not None:
                 df = df.withColumn("gt", T.lit_term(op.graph))
-            if track:
-                self._track_insert(df, self.store.df)
-            self.store = self.store.add(df)
+            self._write(added=df)
         elif isinstance(op, (A.ClearUpdate, A.DropUpdate)):
             tgt = op.target
             df = self.store.df
@@ -1396,7 +1315,7 @@ class SparqlEngine:
                 # removed = complement of kept (bounded to the cleared
                 # graph's rows; no full-store diff)
                 self._cs_track(removed=self._stmt_join(df, kept, anti=True))
-            self.store = TripleStore(spark, kept)
+            self._rewrite(TripleStore(spark, kept))
         elif isinstance(op, A.EntailmentsUpdate):
             # AST2BOpUpdate.java:400-458 Create/Drop/Enable/DisableEntailments
             if op.op == "CREATE":
@@ -1408,7 +1327,7 @@ class SparqlEngine:
                     self._cs_track(
                         removed=self.store.df.where(F.col("inferred") != EXPLICIT)
                     )
-                self.store = TripleStore(spark, self.store.explicit())
+                self._rewrite(TripleStore(spark, self.store.explicit()))
             elif op.op == "ENABLE":
                 self.maintain_entailments = True
                 self._recompute_entailments()
@@ -1432,22 +1351,22 @@ class SparqlEngine:
             else:
                 moved = moved.withColumn("gt", T.lit_term(op.dst))
             moved = moved.select("st", "pt", "ot", "gt", "inferred")
-            base = df
+            dropped = None
             if op.op in ("COPY", "MOVE"):
-                base = base.where(~graph_cond(op.dst))  # overwrite destination
-            if op.op == "MOVE":
-                base = base.where(~graph_cond(op.src))
-            new_store = TripleStore(spark, base).add(moved)
+                dropped = graph_cond(op.dst)  # overwrite destination
+                if op.op == "MOVE":
+                    dropped = dropped | graph_cond(op.src)
+                dropped = df.where(dropped)
+            self._apply(added=moved, removed=dropped)
             if track:
                 # delta bounded to the src/dst graphs (never full-store)
                 aff = graph_cond(op.src) | graph_cond(op.dst)
                 b_aff = df.where(aff)
-                a_aff = new_store.df.where(aff)
+                a_aff = self.store.df.where(aff)
                 self._cs_track(
                     added=self._stmt_join(a_aff, b_aff, anti=True),
                     removed=self._stmt_join(b_aff, a_aff, anti=True),
                 )
-            self.store = new_store
         else:
             raise TypeError(f"unsupported update {type(op)}")
 

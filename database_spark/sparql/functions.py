@@ -409,7 +409,9 @@ class ExprCompiler:
         #: NON-simple so `_let` embeds them exactly once; plain scan
         #: vars keep the zero-wrapping fast path and their plans are
         #: bit-identical.
-        self.heavy = heavy or ()
+        # `is not None`, not `or`: an empty set is the compiler's LIVE
+        # _heavy_vars, which later BINDs extend after construction
+        self.heavy = heavy if heavy is not None else ()
         self.resolve = resolve
         self.replacements = replacements or {}
         self.agg_pairs = agg_pairs or []

@@ -16,15 +16,22 @@ Spark-native design (NOT a port):
   (s,p,o) sort), ``_o_index`` (o_bucket, (o,p,s) sort) and — for quad
   stores — ``_g_index`` (g_bucket over named rows, (g,s,p,o) sort), so
   every triple-pattern shape prunes like the reference's SPO/POS/OSP/
-  CSPO family (``SPOKeyOrder.java:90-128``).  Mutations maintain EVERY
-  copy (``SPORelation`` writes all permutations per statement write):
-  deltas fold in as pruned-pushdown-friendly unions/anti-joins, and the
-  journal's every-``COMPACT_EVERY``-th commit re-buckets the family to
-  flat parquet.  At 100 TB the compaction rewrite is the tunable cost
-  knob (raise ``Journal.COMPACT_EVERY`` to trade read-side delta folds
-  for write amplification); per-bucket manifest compaction (Iceberg/
-  Delta-style reuse of untouched bucket files) is the noted upgrade
-  path if that rewrite ever dominates.
+  CSPO family (``SPOKeyOrder.java:90-128``).
+* Writes take an LSM (log-structured merge) shape.  A store is the
+  immutable layout frames it was loaded or last rebuilt from (the
+  *base*) plus ONE checkpointed *delta* frame keyed by (s,p,o,g), with
+  an ``op`` column (0 add, 1 remove — the format
+  ``Journal.commit_delta`` writes) in which the latest write to a key
+  wins.  Each commit folds into the delta at delta-sized cost
+  (:meth:`TripleStore.apply`).  Every layout view reads
+  ``base ⋉̸ broadcast(delta keys) ∪ delta adds``, so bucket and id
+  filters still push into the base's parquet FileScan however many
+  commits landed — the analog of the reference writing only dirty
+  B+Tree pages at a commit point (``Journal.java``/``RWStrategy.java``)
+  while readers keep their index prefix scans.  The base is rebuilt
+  (:meth:`TripleStore.rebuilt`) only once the delta outgrows
+  ``REBUILD_FRACTION`` of it.  A store with no delta reads its base
+  frames unchanged.
 * Terms are carried inline as structs (see :mod:`database_spark.terms`)
   plus a 64-bit id per position used as the join key.  There is no
   dictionary to join at query time; an optional ``terms()`` view derives
@@ -35,6 +42,7 @@ Spark-native design (NOT a port):
 
 from __future__ import annotations
 
+import os
 import uuid
 from dataclasses import dataclass, field
 
@@ -48,6 +56,13 @@ POSITIONS = ("s", "p", "o", "g")
 EXPLICIT = 0
 INFERRED = 1
 AXIOM = 2
+
+#: delta ``op`` codes (the ``Journal.commit_delta`` file format)
+ADD = 0
+REMOVE = 1
+
+_KEY = ("s", "p", "o", "g")
+_COLS = ("s", "p", "o", "g", "st", "pt", "ot", "gt", "inferred")
 
 
 def _with_ids(df: DataFrame) -> DataFrame:
@@ -70,6 +85,11 @@ def _with_ids(df: DataFrame) -> DataFrame:
 
 @dataclass
 class TripleStore:
+    """An immutable statement set: the layout frames it was loaded or
+    last rebuilt from (its *base*) plus at most ONE checkpointed
+    *delta* holding every write since (module docstring,
+    :meth:`apply`, :meth:`rebuilt`)."""
+
     spark: SparkSession
     df: DataFrame  # columns: s p o g (long), st pt ot gt (TERM), inferred
     #: bucket count of the predicate-partitioned layout this df was
@@ -113,6 +133,23 @@ class TripleStore:
     #: reloading it never serves stale memoized probes (semanticHash of
     #: a file scan derives from rootPaths, not file contents)
     gen: str = field(default_factory=lambda: uuid.uuid4().hex)
+    #: the store whose layout frames are this one's immutable base
+    #: (None: this store IS a base)
+    base: "TripleStore | None" = None
+    #: the ONE checkpointed delta over ``base`` — columns s p o g st pt
+    #: ot gt inferred op, one row per key written since the base
+    delta: DataFrame | None = None
+    delta_rows: int = 0
+    #: the protected checkpoints this store's frames read (a rebuilt
+    #: base's snapshot, the delta) — what a reader pins and what a
+    #: writer may free once no store reads them
+    snaps: tuple = ()
+    #: statement count, once known (cached by :meth:`base_rows`)
+    rows: int | None = None
+
+    #: the base is rebuilt once the delta holds more rows than this
+    #: fraction of it (see :meth:`delta_outgrew_base`)
+    REBUILD_FRACTION = 0.125
 
     # ---------------------------------------------------------------- build
     @staticmethod
@@ -236,29 +273,40 @@ class TripleStore:
         materialized checkpoint blocks and writes its own directory.
         """
         from concurrent.futures import ThreadPoolExecutor
+        from functools import partial
+
+        from pyspark import inheritable_thread_target
 
         from .operators import lifecycle as L
 
         flat = L.checkpoint(self._flat(), eager=self._overlaps_source(path))
         try:
             meta = dict(extra_meta or {})
+
+            def _write_layout(key, dest, *sort):
+                (
+                    _bucketed(flat, key, buckets)
+                    .repartition(f"{key}_bucket")
+                    .sortWithinPartitions(*sort)
+                    .write.mode("overwrite")
+                    .partitionBy(f"{key}_bucket")
+                    .parquet(dest)
+                )
+
             if partition_by_predicate:
                 # first write runs alone: it materializes the (lazy)
                 # checkpoint exactly once; every later write reads the
                 # persisted blocks
-                (
-                    flat.withColumn("p_bucket", F.pmod(F.col("p"), F.lit(buckets)))
-                    .repartition("p_bucket")
-                    .sortWithinPartitions("p", "s", "o")
-                    .write.mode("overwrite")
-                    .partitionBy("p_bucket")
-                    .parquet(path)
-                )
+                _write_layout("p", path, "p", "s", "o")
                 meta["p_buckets"] = buckets
             else:
                 flat.sortWithinPartitions("p", "s", "o").write.mode(
                     "overwrite"
                 ).parquet(path)
+            # the first write materialized the checkpoint: counting its
+            # blocks is cheap, and a loaded store then knows its size
+            # (the delta's rebuild bound) without a scan
+            meta["rows"] = flat.count()
             if self.has_named is None:
                 # settle it now, against the just-written parquet: the
                 # g-IS-NOT-NULL probe prunes on row-group null-count
@@ -269,40 +317,6 @@ class TripleStore:
                     written.where(F.col("g").isNotNull()).limit(1).count()
                 )
             meta["has_named"] = self.has_named
-
-            def _write_s():
-                (
-                    flat.withColumn("s_bucket", F.pmod(F.col("s"), F.lit(buckets)))
-                    .repartition("s_bucket")
-                    .sortWithinPartitions("s", "p", "o")
-                    .write.mode("overwrite")
-                    .partitionBy("s_bucket")
-                    .parquet(path + "/_s_index")
-                )
-
-            def _write_o():
-                (
-                    flat.withColumn("o_bucket", F.pmod(F.col("o"), F.lit(buckets)))
-                    .repartition("o_bucket")
-                    .sortWithinPartitions("o", "p", "s")
-                    .write.mode("overwrite")
-                    .partitionBy("o_bucket")
-                    .parquet(path + "/_o_index")
-                )
-
-            def _write_g():
-                # context-keyed layout for quad stores (the CSPO quad
-                # permutation, SPOKeyOrder.java:101-105): named rows
-                # only, so a GRAPH-bound scan prunes to one g_bucket
-                (
-                    flat.where(F.col("g").isNotNull())
-                    .withColumn("g_bucket", F.pmod(F.col("g"), F.lit(buckets)))
-                    .repartition("g_bucket")
-                    .sortWithinPartitions("g", "s", "p", "o")
-                    .write.mode("overwrite")
-                    .partitionBy("g_bucket")
-                    .parquet(path + "/_g_index")
-                )
 
             def _write_text():
                 # full-text index built at load time, persisted beside
@@ -322,14 +336,24 @@ class TripleStore:
 
             jobs = [_write_text]
             if partition_by_predicate:
-                jobs = [_write_s, _write_o] + jobs
+                jobs = [
+                    partial(_write_layout, "s", path + "/_s_index", "s", "p", "o"),
+                    partial(_write_layout, "o", path + "/_o_index", "o", "p", "s"),
+                ] + jobs
                 meta["s_buckets"] = buckets
                 meta["o_buckets"] = buckets
                 if self.has_named:
-                    jobs.append(_write_g)
+                    # context-keyed layout for quad stores (the CSPO quad
+                    # permutation, SPOKeyOrder.java:101-105): a
+                    # GRAPH-bound scan prunes to one g_bucket
+                    jobs.append(
+                        partial(_write_layout, "g", path + "/_g_index", "g", "s", "p", "o")
+                    )
                     meta["g_buckets"] = buckets
             with ThreadPoolExecutor(max_workers=3) as pool:
-                futures = [pool.submit(j) for j in jobs]
+                # the writes run under the caller's job group
+                inherit = inheritable_thread_target(self.spark)
+                futures = [pool.submit(inherit(j)) for j in jobs]
                 for f in futures:
                     f.result()  # re-raise the first failure
             self._write_meta(path, meta)
@@ -341,20 +365,8 @@ class TripleStore:
         store's lineage still reads (save-onto-itself).  Driver-side
         metadata only (``inputFiles``); unknown ⇒ True (safe: the
         caller checkpoints eagerly before the first overwrite)."""
-        import os as _os
-
-        def _norm(p: str) -> str:
-            if "://" in p and not p.startswith("file:"):
-                return p.rstrip("/")
-            return _os.path.abspath(p.removeprefix("file:"))
-
         try:
-            tgt = _norm(path)
-            for f in self.df.inputFiles():
-                nf = _norm(f)
-                if nf == tgt or nf.startswith(tgt + "/"):
-                    return True
-            return False
+            return any(_under(f, path) for f in self.df.inputFiles())
         except Exception:  # noqa: BLE001 — unknown source shape
             return True
 
@@ -437,6 +449,7 @@ class TripleStore:
             tdf,
             p_buckets=meta.get("p_buckets"),
             has_named=meta.get("has_named"),
+            rows=meta.get("rows"),
             s_df=s_df,
             s_buckets=s_buckets,
             o_df=o_df,
@@ -568,31 +581,6 @@ class TripleStore:
         save/export paths that re-derive layouts themselves)."""
         return self.df.drop("p_bucket") if "p_bucket" in self.df.columns else self.df
 
-    @staticmethod
-    def _dedup_set(df: DataFrame, bucket_cols: tuple = ()) -> DataFrame:
-        """Statement-SET semantics over a union of layout base + new
-        rows: one row per (s,p,o,g), with ``inferred`` resolved by
-        ``min`` (explicit(0) dominates inferred(1) dominates axiom(2) —
-        the reference upgrades an inferred statement on explicit
-        re-insert, ``StatementEnum`` writes keep the dominant type),
-        which also makes the survivor DETERMINISTIC per layout so the
-        three layout copies can never disagree.  Bucket columns join
-        the group keys: they are functional of the ids, so the result
-        set is unchanged — but as GROUPING columns Catalyst pushes a
-        bucket filter through this aggregate into the parquet branch of
-        the union, keeping partition pruning alive on mutated stores."""
-        group = ["s", "p", "o", "g", *bucket_cols]
-        out = df.groupBy(*group).agg(
-            F.any_value("st", True).alias("st"),
-            F.any_value("pt", True).alias("pt"),
-            F.any_value("ot", True).alias("ot"),
-            F.any_value("gt", True).alias("gt"),
-            F.min("inferred").alias("inferred"),
-        )
-        return out.select(
-            "s", "p", "o", "g", "st", "pt", "ot", "gt", "inferred", *bucket_cols
-        )
-
     def _layout_meta(self) -> dict:
         """Constructor kwargs that carry every layout this store has —
         mutations pass the MUTATED layout dfs alongside these counts."""
@@ -603,160 +591,219 @@ class TripleStore:
             "g_buckets": self.g_buckets if self.g_df is not None else None,
         }
 
-    def _pin_delta_frame(self, delta: DataFrame, meta: dict) -> DataFrame:
-        """Materialize a mutation's statement frame ONCE when more than
-        one layout copy will consume it.  Each layout's union/anti-join
-        branch would otherwise re-evaluate ``delta`` independently, and
-        a NONDETERMINISTIC source (a sample, an RDD whose partitioning
-        shifts between evaluations) could insert/remove DIFFERENT rows
-        per copy — silently desynchronizing the layout family (the same
-        hazard class as the r10 range_join two-branch bug).  The
-        checkpoint is delta-sized and LAZY: the first consuming action
-        materializes it once and every other branch reads the stored
-        blocks, so the guarantee costs no extra pass over the delta;
-        blocks live exactly as long as the mutated store's lineage
-        references them (ContextCleaner frees them when the store is
-        garbage collected).  Single-layout stores skip it: one
-        consumer, no divergence possible.  Bulk ingest note: at 100 TB
-        a LOAD-sized `other` lands in block-manager storage here —
-        bulk loads should build a fresh store + ``save`` instead of
-        ``add``-ing into a layout store (DataLoader does)."""
-        if sum(1 for k in ("s_buckets", "o_buckets", "g_buckets") if meta[k]) == 0:
-            return delta
-        from .operators import lifecycle as L
+    def _base(self) -> "TripleStore":
+        return self.base if self.base is not None else self
 
-        return L.checkpoint(delta, eager=False)
+    def base_rows(self) -> int:
+        """Statement count of the base (one count job, cached on it)."""
+        b = self._base()
+        if b.rows is None:
+            b.rows = b.df.count()
+        return b.rows
+
+    def delta_outgrew_base(self) -> bool:
+        """True once the delta holds more rows than ``REBUILD_FRACTION``
+        of the base: rebuilding then costs O(base) once per
+        ``REBUILD_FRACTION · base`` written rows, amortized O(1) per row."""
+        return self.delta is not None and (
+            self.delta_rows > self.REBUILD_FRACTION * self.base_rows()
+        )
+
+    def apply(
+        self,
+        added: DataFrame | None = None,
+        removed: DataFrame | None = None,
+        added_has_named: bool | None = None,
+    ) -> "TripleStore":
+        """One commit's writes: retract ``removed``, then assert
+        ``added`` (term-struct statement frames), folded into the delta
+        in ONE delta-sized job.
+
+        Statement-set semantics per (s,p,o,g) key: the latest write
+        wins, so remove-then-add revives a statement; ``inferred``
+        resolves by ``min`` (explicit 0 < inferred 1 < axiom 2, the
+        reference's ``StatementEnum`` dominance), so an explicit
+        re-insert upgrades an inferred statement and an inferred insert
+        never downgrades an explicit one.
+
+        ``added_has_named``: pass False/True when the caller knows
+        whether ``added`` carries named-graph statements (INSERT DATA
+        quads are enumerable driver-side) to keep the store's flag
+        settled without a scan."""
+        if added is None and removed is None:
+            return self
+        named = self.has_named
+        if added is not None:
+            if added_has_named is None and "gt" not in added.columns:
+                added_has_named = False
+            if self.has_named or added_has_named:
+                named = True
+            elif not (self.has_named is False and added_has_named is False):
+                named = None  # would need a scan; settle lazily
+        delta, rows = self._fold(added, removed)
+        return self._base()._over(delta, rows, named)
 
     def add(self, other: DataFrame, other_has_named: bool | None = None) -> "TripleStore":
-        """Union in new statements (InsertStatementsOp analog).
-
-        LAYOUT-PRESERVING (r10 missing #1): the reference maintains
-        every index permutation transactionally on each write
-        (``SPORelation.java`` writes SPO/POS/OSP together); here each
-        companion layout the store carries (p-/s-/o-bucketed) absorbs
-        the same new rows — with the layout's bucket column computed on
-        the fly — so bound-s/bound-o/bound-p pruning survives SPARQL
-        UPDATE instead of dying on the first INSERT DATA.  The bucket
-        column rides the dedup group keys, so a later bucket filter
-        still prunes the parquet base under the union (plan-tested).
-
-        Scale shape: set semantics need one dedup aggregate per layout;
-        a pruned query pushes its bucket/id filters BELOW that
-        aggregate, so per-query cost stays proportional to the touched
-        buckets, and journal compaction (every 8th commit) re-buckets
-        to flat parquet before union chains deepen.
-
-        ``other_has_named``: pass False/True when the caller knows
-        whether `other` carries named-graph statements (e.g. INSERT
-        DATA quads are enumerable driver-side) to keep the merged
-        store's flag settled without a scan.
-        """
-        if other_has_named is None and "gt" not in other.columns:
-            other_has_named = False
-        if self.has_named or other_has_named:
-            merged_named = True
-        elif self.has_named is False and other_has_named is False:
-            merged_named = False
-        else:
-            merged_named = None  # would need a scan; settle lazily
-        new = _with_ids(other)
-        meta = self._layout_meta()
-        new = self._pin_delta_frame(new, meta)
-
-        def merged(base_df, bucket_col, key_col, n):
-            nb = new.withColumn(bucket_col, F.pmod(F.col(key_col), F.lit(n)))
-            return self._dedup_set(
-                base_df.unionByName(nb), bucket_cols=(bucket_col,)
-            )
-
-        if meta["p_buckets"]:
-            primary = merged(self.df, "p_bucket", "p", meta["p_buckets"])
-        else:
-            primary = self._dedup_set(self._flat().unionByName(new))
-        g_df = None
-        if meta["g_buckets"]:
-            # the g layout holds NAMED rows only — g is its bucket key
-            named_new = new.where(F.col("g").isNotNull())
-            g_df = self._dedup_set(
-                self.g_df.unionByName(
-                    named_new.withColumn(
-                        "g_bucket", F.pmod(F.col("g"), F.lit(meta["g_buckets"]))
-                    )
-                ),
-                bucket_cols=("g_bucket",),
-            )
-        return TripleStore(
-            self.spark,
-            primary,
-            s_df=(
-                merged(self.s_df, "s_bucket", "s", meta["s_buckets"])
-                if meta["s_buckets"]
-                else None
-            ),
-            o_df=(
-                merged(self.o_df, "o_bucket", "o", meta["o_buckets"])
-                if meta["o_buckets"]
-                else None
-            ),
-            g_df=g_df,
-            has_named=merged_named,
-            **meta,
-        )
+        """Union in new statements (InsertStatementsOp analog)."""
+        return self.apply(added=other, added_has_named=other_has_named)
 
     def remove(self, other: DataFrame) -> "TripleStore":
-        """Remove statements by (s,p,o,g) identity (RemoveStatementsOp).
+        """Remove statements by (s,p,o,g) identity (RemoveStatementsOp);
+        a NULL g is the default graph."""
+        return self.apply(removed=other)
 
-        g needs a null-safe join: NULL g = default graph, and a plain
-        equi-join would never match it.
+    def _fold(self, added, removed) -> tuple[DataFrame, int]:
+        """``new ∪ (delta ⋉̸ new keys)`` as one aggregate over the old
+        delta (src 0), this commit's removes (src 1) and adds (src 2),
+        checkpointed and counted by the same job.  The frame is
+        materialized ONCE, so a nondeterministic source (a sample, an
+        RDD whose partitioning shifts between evaluations) cannot write
+        different rows into different layouts.
 
-        LAYOUT-PRESERVING like :meth:`add`: every layout copy anti-joins
-        the same key set (the keys side is delta-sized and broadcasts;
-        the layout side streams map-side with its partition pruning
-        intact — filters push below a left-anti join's stream side).
-        """
+        An insert that may carry inferred/axiom rows also reads the
+        current statements held for its weak keys, so ``min`` sees the
+        stronger type; an all-explicit frame skips that lookup, since
+        explicit already dominates."""
+        from .operators import lifecycle as L
+
+        src = F.col("__src")
+        parts = []
+        if self.delta is not None:
+            parts.append(self.delta.withColumn("__src", F.lit(0)))
+        if removed is not None:
+            parts.append(_with_ids(removed).withColumn("op", F.lit(REMOVE).cast("tinyint"))
+                         .withColumn("__src", F.lit(1)))
+        if added is not None:
+            new = _with_ids(added)
+            parts.append(new.withColumn("op", F.lit(ADD).cast("tinyint"))
+                         .withColumn("__src", F.lit(2)))
+            if "inferred" in added.columns:
+                weak = new.where(F.col("inferred") != EXPLICIT).select(
+                    *[F.col(k).alias("__k" + k) for k in _KEY]
+                )
+                held = self._flat().join(F.broadcast(weak), _key_match("__k"), "left_semi")
+                parts.append(held.select(*_COLS).withColumn("op", F.lit(ADD).cast("tinyint"))
+                             .withColumn("__src", F.lit(0)))
+        u = parts[0]
+        for p in parts[1:]:
+            u = u.unionByName(p)
+        agg = u.groupBy(*_KEY).agg(
+            *[F.any_value(c, True).alias(c) for c in ("st", "pt", "ot", "gt")],
+            F.max(src).alias("__last"),
+            F.max(F.when(src == 1, F.lit(1))).alias("__rm"),
+            F.min(F.when(src == 2, F.col("inferred"))).alias("__new"),
+            F.min(F.when((src == 0) & (F.col("op") == ADD), F.col("inferred"))).alias("__held"),
+            F.min(F.when(src == 0, F.col("op"))).alias("__op"),
+        )
+        last = F.col("__last")
+        folded = agg.select(
+            *_KEY, "st", "pt", "ot", "gt",
+            F.least(F.col("__new"), F.when(F.col("__rm").isNull(), F.col("__held")))
+            .cast("tinyint").alias("inferred"),
+            F.when(last == 2, F.lit(ADD)).when(last == 1, F.lit(REMOVE))
+            .otherwise(F.col("__op")).cast("tinyint").alias("op"),
+        )
+        delta = L.protect(L.checkpoint(folded, eager=False))
+        # count the checkpoint's RDD, not the frame: the same job that
+        # materializes the blocks, with no count-aggregate shuffle
+        return delta, int(delta._jdf.queryExecution().toRdd().count())
+
+    def _over(self, delta: DataFrame, rows: int, has_named) -> "TripleStore":
+        """This base with ``delta`` read through every layout:
+        ``base ⋉̸ broadcast(delta keys) ∪ delta adds``, each add
+        carrying the layout's bucket column.  Bucket and id filters push
+        through the union and the anti-join's stream side into the
+        base's parquet FileScan, so pruning survives any number of
+        commits."""
         meta = self._layout_meta()
-        keys = self._pin_delta_frame(
-            _with_ids(other).select(
-                F.col("s").alias("__ks"),
-                F.col("p").alias("__kp"),
-                F.col("o").alias("__ko"),
-                F.col("g").alias("__kg"),
-            ),
-            meta,
-        )
-        cond = (
-            (F.col("s") == F.col("__ks"))
-            & (F.col("p") == F.col("__kp"))
-            & (F.col("o") == F.col("__ko"))
-            & F.col("g").eqNullSafe(F.col("__kg"))
-        )
-        kept = (
-            self.df if meta["p_buckets"] else self._flat()
-        ).join(keys, cond, "left_anti")
-        # has_named=True stays True (a stale True only costs an
-        # unnecessary-but-correct dedupe in default_graph); False stays
-        # False (removal can't add named statements)
+        keys = F.broadcast(delta.select(*[F.col(k).alias("__k" + k) for k in _KEY]))
+        adds = delta.where(F.col("op") == ADD).select(*_COLS)
+
+        def view(frame, key=None):
+            a = adds if key is None else _bucketed(adds, key, meta[f"{key}_buckets"])
+            return frame.join(keys, _key_match("__k"), "left_anti").unionByName(a)
+
+        def aux(frame, key):
+            return view(frame, key) if meta[f"{key}_buckets"] else None
+
         return TripleStore(
             self.spark,
-            kept,
-            s_df=(
-                self.s_df.join(keys, cond, "left_anti")
-                if meta["s_buckets"]
-                else None
-            ),
-            o_df=(
-                self.o_df.join(keys, cond, "left_anti")
-                if meta["o_buckets"]
-                else None
-            ),
-            g_df=(
-                self.g_df.join(keys, cond, "left_anti")
-                if meta["g_buckets"]
-                else None
-            ),
-            has_named=self.has_named,
+            view(self.df, "p") if meta["p_buckets"] else view(self._flat()),
+            s_df=aux(self.s_df, "s"),
+            o_df=aux(self.o_df, "o"),
+            g_df=aux(self.g_df, "g"),
+            has_named=has_named,
+            base=self,
+            delta=delta,
+            delta_rows=rows,
+            snaps=(*self.snaps, delta),
             **meta,
         )
+
+    def rebuilt(self) -> "TripleStore":
+        """Fold the delta into a new base: ONE protected checkpoint of
+        the merged primary layout (the journal commit-record analog —
+        reads start from a materialized snapshot, like the reference's
+        B+Tree after a commit point).  The companion layouts become
+        VIEWS of that snapshot with their bucket column recomputed: no
+        extra storage, and a checkpoint has no parquet partitions left
+        to prune anyway, so the compiler's p-/s-/o-/g-layout paths stay
+        live and the next full ``save()`` re-materializes them as
+        pruned parquet.  Also truncates the lineage of a store a
+        whole-store rewrite (CLEAR, COPY, closure) derived from older
+        snapshots."""
+        from .operators import lifecycle as L
+
+        meta = self._layout_meta()
+        snap = L.protected_checkpoint(self.df)
+        flat = snap.drop("p_bucket") if "p_bucket" in snap.columns else snap
+
+        def aux(key):
+            n = meta[f"{key}_buckets"]
+            return _bucketed(flat, key, n) if n else None
+
+        return TripleStore(
+            self.spark,
+            snap,
+            s_df=aux("s"),
+            o_df=aux("o"),
+            g_df=aux("g"),
+            has_named=self.has_named,
+            snaps=(snap,),
+            **meta,
+        )
+
+
+def _bucketed(df: DataFrame, key: str, n: int) -> DataFrame:
+    """``df`` with the ``{key}_bucket = pmod(key, n)`` layout column;
+    the g layout holds NAMED rows only (g is its bucket key)."""
+    if key == "g":
+        df = df.where(F.col("g").isNotNull())
+    return df.withColumn(f"{key}_bucket", F.pmod(F.col(key), F.lit(n)))
+
+
+def _norm_path(p: str) -> str:
+    if "://" in p and not p.startswith("file:"):
+        return p.rstrip("/")
+    return os.path.abspath(p.removeprefix("file:"))
+
+
+def _under(f: str, base: str) -> bool:
+    """True when file ``f`` lives at or under ``base`` (any filesystem)."""
+    f, base = _norm_path(f), _norm_path(base)
+    return f == base or f.startswith(base + "/")
+
+
+def _key_match(prefix: str) -> Column:
+    """(s,p,o,g) identity against ``prefix``-renamed key columns —
+    null-safe on g (NULL g = default graph; a plain equi-join would
+    never match it)."""
+    return (
+        (F.col("s") == F.col(prefix + "s"))
+        & (F.col("p") == F.col(prefix + "p"))
+        & (F.col("o") == F.col(prefix + "o"))
+        & F.col("g").eqNullSafe(F.col(prefix + "g"))
+    )
 
 
 # -------------------------------------------------------------- rdfize

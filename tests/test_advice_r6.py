@@ -76,9 +76,10 @@ def test_txids_unique_under_concurrency(spark):
 
 
 def test_tx_registration_atomic_with_compaction(spark):
-    """Readers opening transactions while a writer commits through
-    compaction ticks: every tx view must stay queryable (its pinned
-    snapshot must not be freed between store read and registration)."""
+    """Readers opening transactions while a writer's commits rotate
+    the store's delta and base snapshots: every tx view must stay
+    queryable (its pinned snapshots must not be freed between store
+    read and registration)."""
     eng = _engine(spark, 1)
     errors = []
     stop = threading.Event()

@@ -413,3 +413,85 @@ def test_null_slice_probe_is_static_or_memoized(compiler, spark, tmp_path):
     n2, _ = _jobs_during(spark, "probe-second", lambda: compiler.join(fleft, right))
     assert n1 >= 1, "file-backed slice must probe on first sight"
     assert n2 == 0, f"recompile must reuse the memoized probe ({n2} jobs)"
+
+
+def test_materialize_shared_jobs_follow_callers_job_group(
+    compiler, spark, tmp_path, monkeypatch
+):
+    """The compat join materializes a heavy side on a pool thread; its
+    jobs must run under the CALLER's job group, so a query's job
+    accounting (``getJobIdsForGroup``) and cancellation
+    (``cancelJobGroup``) cover them."""
+    import threading
+    import time
+
+    from database_spark.operators import lifecycle as L
+
+    rng = random.Random(7)
+    lvars, rvars = {"a", "x"}, {"a", "y"}
+    left = _mk_sol(spark, _random_rows(rng, lvars, {"a"}, 20), lvars, {"a"})
+    right = _mk_sol(spark, _random_rows(rng, rvars, set(), 6), rvars, set())
+    p = str(tmp_path / "shared_left")
+    left.df.write.mode("overwrite").parquet(p)
+    fdf = spark.read.parquet(p)
+    # join-shaped and file-backed: neither statically small nor
+    # scan-shaped, so _materialize_shared checkpoints it
+    heavy = fdf.join(fdf.select("x__id").distinct(), "x__id")
+
+    sc = spark.sparkContext
+    seen, started = [], threading.Event()
+    real = L.checkpoint_count
+
+    def spy(df):
+        seen.append((
+            threading.current_thread() is threading.main_thread(),
+            sc.getLocalProperty("spark.jobGroup.id"),
+        ))
+        started.set()
+        return real(df)
+
+    monkeypatch.setattr(L, "checkpoint_count", spy)
+    n, _ = _jobs_during(
+        spark, "compat-shared", lambda: compiler.join(Sol(heavy, lvars, {"a"}), right)
+    )
+    assert seen and all(
+        not on_main and group == "compat-shared" for on_main, group in seen
+    ), seen
+    assert n >= len(seen)
+
+    # a slow materialization, cancelled through the caller's group
+    slow = heavy.withColumn(
+        "__slow", F.expr("reflect('java.lang.Thread', 'sleep', CAST(300 AS BIGINT))")
+    )
+    started.clear()
+    errors = []
+
+    def run():
+        sc.setJobGroup("compat-cancel", "compat-cancel")
+        try:
+            compiler.join(Sol(slow, lvars, {"a"}), right)
+        except Exception as e:  # noqa: BLE001 — the cancelled job's error
+            errors.append(e)
+        finally:
+            sc.setJobGroup(None, None)
+
+    t = threading.Thread(target=run)
+    t.start()
+    assert started.wait(60)
+    tracker = sc.statusTracker()
+    # cancel whenever a job of the group is active: the pool thread's
+    # jobs only fail if they run under the caller's group
+    deadline = time.time() + 60
+    while t.is_alive() and time.time() < deadline:
+        group_jobs = set(tracker.getJobIdsForGroup("compat-cancel"))
+        if group_jobs & set(tracker.getActiveJobsIds()):
+            sc.cancelJobGroup("compat-cancel")
+        time.sleep(0.05)
+    t.join(60)
+    assert not t.is_alive() and errors, "the pool job ran outside the group"
+    ids = tracker.getJobIdsForGroup("compat-cancel")
+    assert all(tracker.getJobInfo(i).status != "RUNNING" for i in ids)
+    assert not tracker.getActiveJobsIds()
+    for own in compiler._owned:
+        L.free(own)
+    compiler._owned.clear()

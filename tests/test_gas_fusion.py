@@ -95,3 +95,32 @@ def test_fusion_data_gate_and_action_count(spark, fusion_gate):
     assert fused == gated
     assert fused_jobs < gated_jobs
     L.sweep(spark)
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_multi_sssp_tag_column_named_like_a_keyword(spark, fusion_gate, distributed):
+    """multi_sssp splices its tag column into SQL text; a column named
+    like a reserved word must be quoted, on the driver-local and the
+    distributed path alike (reserved words only reject unquoted use
+    under ANSI keyword enforcement, so the test turns it on)."""
+    e = (
+        _chain_edges(spark, 5)
+        .withColumn("weight", F.lit(1.0))
+        .withColumn("order", F.lit(0))
+    )
+    seeds = spark.sql(
+        "SELECT CAST(0 AS BIGINT) node, CAST(0 AS BIGINT) seed, 0 AS `order`"
+    )
+    if not distributed:
+        fusion_gate.setattr(G, "SMALL_GRAPH_EDGES", 1000)
+    spark.conf.set("spark.sql.ansi.enforceReservedKeywords", "true")
+    try:
+        rows = G.multi_sssp(
+            e, seeds, dir_col="order", max_rounds=20 if distributed else None
+        ).collect()
+    finally:
+        spark.conf.unset("spark.sql.ansi.enforceReservedKeywords")
+    assert sorted((r["node"], r["order"], r["dist"]) for r in rows) == [
+        (i, 0, float(i)) for i in range(6)
+    ]
+    L.sweep(spark)

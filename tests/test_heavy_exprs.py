@@ -40,6 +40,18 @@ def test_heavy_var_embedded_once(spark):
     assert n_plain > 1
 
 
+def test_heavy_var_marked_after_construction_is_seen(spark):
+    """The compiler hands ExprCompiler its LIVE ``_heavy_vars`` set,
+    which a later BIND extends: an empty set at construction must stay
+    aliased (``heavy or ()`` replaced it with a fresh tuple)."""
+    resolve = lambda name: F.col(name)  # noqa: E731
+    heavy: set = set()
+    ec = ExprCompiler(resolve, heavy=heavy)
+    heavy.add("fee")
+    assert ec.heavy is heavy
+    assert repr(ec.bool(_cmp_expr())).count("fee") == 1
+
+
 @pytest.fixture(scope="module")
 def eng(spark):
     iri = Term.iri

@@ -483,3 +483,43 @@ def test_incremental_compaction_falls_back_without_partitioned_base(
     meta = TripleStore._read_meta(spark, journal._vdir(2))
     assert "compaction" not in meta
     assert sorted(names(journal.begin())) == ["A", "B"]
+
+
+def test_commit_delta_with_in_memory_store_takes_full_rewrite(spark, tmp_path):
+    """The incremental compaction's provenance guard must refuse a
+    store whose frames read NO files: a checkpointed (rebuilt) store
+    with the base's bucket layout is not provably fold(base, deltas),
+    so ``commit_delta(..., store=...)`` takes the classic full rewrite
+    instead of cloning untouched buckets from the base."""
+    from database_spark.journal import _files_under
+    from database_spark.operators import lifecycle as L
+    from database_spark.store import TripleStore
+    from database_spark.terms import Term
+
+    journal = Journal(spark, str(tmp_path / "mem_journal"))
+    journal.COMPACT_EVERY = 2
+    base_dir = str(tmp_path / "mem_base")
+    trips = [
+        (Term.iri(EX + f"s{i}"), Term.iri(EX + f"p{i % 5}"), Term.integer(i))
+        for i in range(30)
+    ]
+    TripleStore.from_python_triples(spark, trips).save(
+        base_dir, partition_by_predicate=True, buckets=8
+    )
+    journal.commit(TripleStore.load(spark, base_dir))  # full v1, buckets=8
+    added = TripleStore.from_python_triples(
+        spark, [(Term.iri(EX + "n"), Term.iri(EX + "p0"), Term.integer(99))]
+    ).df.select("st", "pt", "ot", "gt")
+    folded = TripleStore.load(spark, base_dir).add(added)
+    store = folded.rebuilt()  # same statements, reads no files
+    assert store.p_buckets == 8 and store.s_df is not None
+    assert not _files_under(store.df, journal._vdir(1))
+    assert not _files_under(
+        TripleStore.from_python_triples(spark, trips).df, str(tmp_path / "nowhere")
+    )
+    assert journal.commit_delta(added, None, store=store) == 2
+    assert journal._kinds()["2"] == "full"
+    assert "compaction" not in TripleStore._read_meta(spark, journal._vdir(2))
+    assert journal.open().df.count() == 31
+    for snap in (*folded.snaps, *store.snaps):
+        L.unprotect_and_free(snap)

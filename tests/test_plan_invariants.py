@@ -102,3 +102,45 @@ def test_ref_lookup_entry_scans_object_layout(spark, sf_dir):
     assert any(
         "PartitionFilters" in l and "o_bucket" in l for l in plan.splitlines()
     ), plan
+
+
+def test_bound_subject_plan_constant_across_commits(spark, tmp_path):
+    """A store takes writes as ONE delta over its parquet base: after
+    any number of commits a bound-subject SELECT still reads a pruned
+    FileScan (s_bucket PartitionFilters), and its plan broadcasts the
+    delta keys once per layout scan — the BroadcastExchange count does
+    not grow with the commit count."""
+    from database_spark.sparql.engine import SparqlEngine
+    from database_spark.store import TripleStore
+    from database_spark.terms import Term
+
+    ex = "http://example.org/"
+    path = str(tmp_path / "commits")
+    trips = [
+        (Term.iri(ex + f"s{i}"), Term.iri(ex + f"p{i % 5}"), Term.integer(i))
+        for i in range(400)
+    ]
+    TripleStore.from_python_triples(spark, trips).save(
+        path, partition_by_predicate=True, buckets=8
+    )
+    eng = SparqlEngine(TripleStore.load(spark, path))
+    base = eng.store
+    q = f"SELECT ?p ?o WHERE {{ <{ex}s1> ?p ?o }}"
+    shapes = {}
+    for i in range(1, 25):
+        if i % 3 == 0:  # delete the previous commit's insert
+            eng.update(f"DELETE DATA {{ <{ex}s1> <{ex}x{i - 1}> {i - 1} }}")
+        else:
+            eng.update(f"INSERT DATA {{ <{ex}s1> <{ex}x{i}> {i} }}")
+        if i in (1, 3, 8, 24):
+            df = eng.select(q).df
+            plan = _plan(df)
+            assert any(
+                "PartitionFilters" in l and "s_bucket" in l
+                for l in plan.splitlines()
+            ), plan
+            want = 1 + sum(1 for k in range(1, i + 1) if k % 3 != 0) - i // 3
+            assert df.count() == want
+            shapes[i] = plan.count("BroadcastExchange")
+    assert eng.store._base() is base, "24 commits stay under the rebuild bound"
+    assert len(set(shapes.values())) == 1, shapes

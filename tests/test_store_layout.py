@@ -633,11 +633,11 @@ def test_mutation_preserves_g_layout(spark, saved_quads):
 
 
 def test_engine_compaction_keeps_layout_family(spark, tmp_path):
-    """Engine lineage compaction (every _COMPACT_EVERY commits) must
-    not flatten the layout family away: after compaction the store
-    still carries s-/o-layout views (derived from the checkpointed
-    snapshot — no extra storage) and unbound-predicate queries stay
-    correct, including rows added after the compaction point."""
+    """A base rebuild (the delta outgrew REBUILD_FRACTION of the base)
+    must not flatten the layout family away: after the rebuild the
+    store still carries s-/o-layout views (derived from the
+    checkpointed snapshot — no extra storage) and unbound-predicate
+    queries stay correct, including rows added after the rebuild."""
     path = str(tmp_path / "compact")
     trips = [
         (Term.iri(EX + f"s{i}"), Term.iri(EX + f"p{i % 5}"), Term.integer(i))
@@ -647,11 +647,15 @@ def test_engine_compaction_keeps_layout_family(spark, tmp_path):
         path, partition_by_predicate=True, buckets=8
     )
     eng = SparqlEngine(TripleStore.load(spark, path))
-    n = eng._COMPACT_EVERY
-    for i in range(n + 1):  # crosses one compaction boundary
+    base0 = eng.store
+    # 50 × 1/8 → the 7th single-statement commit crosses the bound
+    n = int(50 * TripleStore.REBUILD_FRACTION) + 1
+    for i in range(n + 1):  # crosses one rebuild, then one more delta
         eng.update(
             f'PREFIX ex: <{EX}> INSERT DATA {{ ex:s1 ex:extra{i} {1000 + i} }}'
         )
+    assert eng.store._base() is not base0 and eng.store._base().snaps
+    assert eng.store.delta_rows == 1
     assert eng.store.s_df is not None and eng.store.o_df is not None
     assert eng.store.p_buckets == 8
     rows = eng.select(

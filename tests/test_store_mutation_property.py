@@ -23,7 +23,10 @@ import random
 
 import pytest
 
-from database_spark.store import TripleStore
+from pyspark.sql import functions as F
+
+from database_spark import terms as T
+from database_spark.store import AXIOM, EXPLICIT, INFERRED, TripleStore
 from database_spark.terms import Term
 
 EX = "http://example.org/"
@@ -128,9 +131,9 @@ def test_nondeterministic_mutation_frame_cannot_desync_layouts(
     drops a random row per evaluation) must still leave every layout
     copy identical: the frame is pinned once before the per-layout
     union/anti-join branches consume it (the same hazard class as the
-    r10 range_join two-branch bug, closed in store._pin_delta_frame).
-    Without the pin, primary/_s_index/_o_index would each see a
-    DIFFERENT row subset."""
+    r10 range_join two-branch bug): the commit fold materializes it
+    once, and every layout reads that one delta.  Evaluated per layout,
+    primary/_s_index/_o_index would each see a DIFFERENT row subset."""
     path = str(tmp_path / "nd")
     base = [
         (Term.iri(EX + f"s{i}"), Term.iri(EX + f"p{i % 3}"), Term.integer(i))
@@ -171,3 +174,125 @@ def test_nondeterministic_mutation_frame_cannot_desync_layouts(
     want2 = _bag(removed.df)
     assert _bag(removed.s_df) == want2
     assert _bag(removed.o_df) == want2
+
+
+# ------------------------------------------ inferred dominance, revival
+def _typed(spark, stmts, inferred):
+    """Statement frame with an explicit ``inferred`` column."""
+    return _frame(spark, stmts).withColumn(
+        "inferred", F.lit(inferred).cast("tinyint")
+    )
+
+
+def _types(store):
+    """{statement key: inferred} on every layout; the layouts agree."""
+    out = []
+    for df in (store.df, store.s_df, store.o_df):
+        out.append({
+            (r["st"]["lex"], r["pt"]["lex"], r["ot"]["lex"]): r["inferred"]
+            for r in df.select("st", "pt", "ot", "inferred").collect()
+        })
+    assert out[0] == out[1] == out[2]
+    return out[0]
+
+
+@pytest.fixture()
+def saved(spark, tmp_path):
+    """A saved 4-layout store holding a (explicit) and b (inferred)."""
+    path = str(tmp_path / "dom")
+    TripleStore.from_term_structs(
+        spark,
+        _frame(spark, [A]).withColumn("inferred", F.lit(EXPLICIT).cast("tinyint"))
+        .unionByName(_typed(spark, [B], INFERRED)),
+    ).save(path, partition_by_predicate=True, buckets=8)
+    return TripleStore.load(spark, path)
+
+
+A = (Term.iri(EX + "a"), Term.iri(EX + "p"), Term.iri(EX + "x"), None)
+B = (Term.iri(EX + "b"), Term.iri(EX + "p"), Term.iri(EX + "y"), None)
+C = (Term.iri(EX + "c"), Term.iri(EX + "p"), Term.iri(EX + "z"), None)
+
+
+def _k(t):
+    return (t[0].lex, t[1].lex, t[2].lex)
+
+
+def test_explicit_reinsert_upgrades_inferred(spark, saved):
+    # base row b is inferred: an explicit insert upgrades it
+    st = saved.add(_typed(spark, [B], EXPLICIT))
+    assert _types(st)[_k(B)] == EXPLICIT
+    # delta row c is inferred: a later explicit insert upgrades it
+    st = st.add(_typed(spark, [C], INFERRED))
+    assert _types(st)[_k(C)] == INFERRED
+    st = st.add(_frame(spark, [C]))  # no inferred column = explicit
+    assert _types(st)[_k(C)] == EXPLICIT
+
+
+def test_inferred_insert_never_downgrades_explicit(spark, saved):
+    # base row a is explicit
+    st = saved.add(_typed(spark, [A], INFERRED))
+    assert _types(st)[_k(A)] == EXPLICIT
+    # delta row c is explicit; an axiom insert in the SAME frame as an
+    # inferred one resolves to the strongest of the three
+    st = st.add(_frame(spark, [C]))
+    st = st.add(_typed(spark, [C], AXIOM).unionByName(_typed(spark, [C], INFERRED)))
+    assert _types(st)[_k(C)] == EXPLICIT
+    # an inferred insert over an axiom upgrades it to inferred
+    st = st.add(_typed(spark, [(C[0], C[1], Term.iri(EX + "w"), None)], AXIOM))
+    st = st.add(_typed(spark, [(C[0], C[1], Term.iri(EX + "w"), None)], INFERRED))
+    assert _types(st)[(C[0].lex, C[1].lex, EX + "w")] == INFERRED
+    assert _types(st)[_k(B)] == INFERRED  # untouched rows keep theirs
+
+
+def test_remove_then_add_revives(spark, saved):
+    # across commits: base row, delta row
+    st = saved.remove(_frame(spark, [A])).add(_frame(spark, [C]))
+    assert _k(A) not in _types(st)
+    st = st.add(_frame(spark, [A])).remove(_frame(spark, [C]))
+    assert _k(A) in _types(st) and _k(C) not in _types(st)
+    st = st.add(_frame(spark, [C]))
+    assert {_k(A), _k(C), _k(B)} == set(_types(st))
+    # within ONE commit: removes land first, so the add revives, and a
+    # removed inferred row comes back with the inserted type only
+    st = saved.apply(added=_typed(spark, [B], AXIOM), removed=_frame(spark, [B]))
+    assert _types(st)[_k(B)] == AXIOM
+    st = st.apply(added=_frame(spark, [A]), removed=_frame(spark, [A]))
+    assert _types(st)[_k(A)] == EXPLICIT and len(_types(st)) == 2
+
+
+def test_engine_delta_crossing_rebuild_bound_keeps_answers(spark, tmp_path):
+    """A small base whose delta crosses the rebuild bound exactly once:
+    every layout matches the set model before and after the rebuild,
+    and the rebuilt base carries the delta's rows."""
+    from database_spark.sparql.engine import SparqlEngine
+
+    path = str(tmp_path / "small")
+    base = [
+        (Term.iri(EX + f"s{i}"), Term.iri(EX + f"p{i % 3}"), Term.integer(i))
+        for i in range(16)
+    ]
+    TripleStore.from_python_triples(spark, base).save(
+        path, partition_by_predicate=True, buckets=4
+    )
+    eng = SparqlEngine(TripleStore.load(spark, path))
+    model = {(s.lex, p.lex, o.lex, o.dt or "", "") for s, p, o in base}
+    bases = [eng.store._base()]
+    rng = random.Random(3)
+    # 16 × 1/8 = 2: the third delta row crosses the bound
+    for i in range(5):
+        s, k = f"s{rng.randrange(16)}", f"n{i}"
+        if i == 3:  # a delete of a base row
+            eng.update(f'DELETE DATA {{ <{EX}s0> <{EX}p0> 0 }}')
+            model.discard((EX + "s0", EX + "p0", "0", T.XSD_INTEGER, ""))
+        else:
+            eng.update(f'INSERT DATA {{ <{EX}{s}> <{EX}{k}> {100 + i} }}')
+            model.add((EX + s, EX + k, str(100 + i), T.XSD_INTEGER, ""))
+        if eng.store._base() is not bases[-1]:
+            bases.append(eng.store._base())
+        want = sorted(model)
+        assert _bag(eng.store.df) == want
+        assert _bag(eng.store.s_df) == want and _bag(eng.store.o_df) == want
+        s_rows = eng.select(f"SELECT ?p ?o WHERE {{ <{EX}{s}> ?p ?o }}").df.count()
+        assert s_rows == sum(1 for m in model if m[0] == EX + s)
+    assert len(bases) == 2, "the delta must cross the rebuild bound exactly once"
+    assert eng.store._base().snaps and eng.store.delta_rows <= 2

@@ -144,34 +144,34 @@ def test_tx_unknown_and_bad_id(endpoint):
 
 
 def test_tx_survives_compaction(spark):
-    """The scale-critical path: lineage compaction must NOT free a
-    snapshot a live tx reads on (freeing a localCheckpoint a dependent
-    DataFrame needs raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the
-    next read).  Sequence: enough commits to create snapshot A, begin a
-    tx (pins A), enough commits for compaction to replace A with B —
-    the free of A is deferred — then the tx must still answer, and
-    ending the tx releases A."""
+    """The scale-critical path: a commit must NOT free a snapshot a
+    live tx reads on (freeing a localCheckpoint a dependent DataFrame
+    needs raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the next read).
+    Sequence: commits over a one-statement base (each one outgrows the
+    base, so each rebuilds it) leave snapshot set A; a tx begins (pins
+    A); further commits retire A — its free is deferred — then the tx
+    must still answer, and ending the tx releases A."""
     eng = SparqlEngine(
         TripleStore.from_python_triples(
             spark,
             [(Term.iri(EX + "s"), Term.iri(EX + "p"), Term.literal("0"))],
         )
     )
-    every = eng._COMPACT_EVERY
-    for i in range(every):  # creates compaction snapshot A
+    every = 4
+    for i in range(every):
         eng.update(f'INSERT DATA {{ <{EX}a{i}> <{EX}p> "{i}" }}')
-    assert eng._compact_snapshot is not None
-    snap_a = eng._compact_snapshot
+    snaps_a = eng.store.snaps
+    assert snaps_a
 
     txid = eng.begin_read_tx()
     n_at_tx = eng.tx_view(txid).select(
         "SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }"
     ).df.count()
 
-    for i in range(every):  # compaction replaces A; free deferred
+    for i in range(every):  # retire A; the free is deferred
         eng.update(f'INSERT DATA {{ <{EX}b{i}> <{EX}p> "{i}" }}')
-    assert eng._compact_snapshot is not snap_a
-    assert id(snap_a) in eng._deferred_snaps
+    assert not any(s in eng.store.snaps for s in snaps_a)
+    assert all(id(s) in eng._deferred_snaps for s in snaps_a)
 
     # the pinned view still evaluates (blocks for A alive) and is
     # isolated from the later inserts
@@ -187,7 +187,7 @@ def test_tx_survives_compaction(spark):
         view.update(f'INSERT DATA {{ <{EX}x> <{EX}p> "x" }}')
 
     eng.end_tx(txid)
-    assert id(snap_a) not in eng._deferred_snaps
+    assert not any(id(s) in eng._deferred_snaps for s in snaps_a)
     # unisolated engine unaffected
     n = [
         r["n"].lex
