@@ -455,7 +455,6 @@ def tm_retract(
     justs: DataFrame,
     deleted: DataFrame,
     max_iter: int | None = None,
-    with_delta: bool = False,
 ):
     """Justification-based truth maintenance for retraction — the DRed
     (delete-and-rederive) algorithm over the justification table, the
@@ -470,12 +469,13 @@ def tm_retract(
     ``deleted`` — DataFrame with term columns st/pt/ot of the retracted
                   explicit statements (ids derived content-hash-side).
 
-    Returns ``(new_store, new_justs)``; with ``with_delta=True``,
-    ``(new_store, new_justs, (added_rows, removed_rows))`` where the
-    delta DataFrames carry the statements this retraction actually
-    added (explicit statements resurrected as inferences) and removed
-    (unsupported inferred statements) — the changesets API's
-    truth-maintenance feed (reference: IChangeLog + TruthMaintenance).
+    Returns ``(new_justs, (added_rows, removed_rows))``: the statements
+    this retraction adds (explicit statements resurrected as
+    inferences) and removes (unsupported inferred statements), as
+    checkpointed frames.  The new store is ``store.apply(added_rows,
+    removed_rows)`` — a delta-sized fold, never a full-store rewrite —
+    and the same pair is the changesets API's truth-maintenance feed
+    (reference: IChangeLog + TruthMaintenance).
 
     Cost: every job is a hash join keyed on statement ids between the
     checkpointed justification table and the (cone-sized) frontier —
@@ -486,7 +486,6 @@ def tm_retract(
     """
     from ..store import _with_ids
 
-    spark = store.spark
     D = L.checkpoint(
         _with_ids(deleted.select("st", "pt", "ot"))
         .select("s", "p", "o")
@@ -614,15 +613,6 @@ def tm_retract(
     rm = removed.select(
         F.col("s").alias("xs"), F.col("p").alias("xp"), F.col("o").alias("xo")
     )
-    kept = store.df.join(
-        rm,
-        F.col("g").isNull()
-        & (F.col("s") == F.col("xs"))
-        & (F.col("p") == F.col("xp"))
-        & (F.col("o") == F.col("xo")),
-        "left_anti",
-    )
-    new_df = kept.unionByName(resurrected.select(*kept.columns))
     # prune dead justifications: any row whose head or some premise is
     # in the removed set, or was a deleted explicit support that did
     # NOT survive as inferred
@@ -646,28 +636,22 @@ def tm_retract(
         .join(dead_jids, "jid", "left_anti")
         .drop("jid")
     )
-    out_df = L.checkpoint(new_df)
-    delta = None
-    if with_delta:
-        # materialize BEFORE freeing the checkpointed inputs they read
-        # (a lazy plan over freed blocks dies at runtime)
-        rm_rows = L.checkpoint(
-            store.df.join(
-                rm,
-                F.col("g").isNull()
-                & (F.col("s") == F.col("xs"))
-                & (F.col("p") == F.col("xp"))
-                & (F.col("o") == F.col("xo")),
-                "left_semi",
-            ).select("st", "pt", "ot", "gt", "inferred")
-        )
-        add_rows = L.checkpoint(
-            resurrected.select("st", "pt", "ot", "gt", "inferred")
-        )
-        delta = (add_rows, rm_rows)
+    # materialize BEFORE freeing the checkpointed inputs they read
+    # (a lazy plan over freed blocks dies at runtime)
+    rm_rows = L.checkpoint(
+        store.df.join(
+            rm,
+            F.col("g").isNull()
+            & (F.col("s") == F.col("xs"))
+            & (F.col("p") == F.col("xp"))
+            & (F.col("o") == F.col("xo")),
+            "left_semi",
+        ).select("st", "pt", "ot", "gt", "inferred")
+    )
+    add_rows = L.checkpoint(
+        resurrected.select("st", "pt", "ot", "gt", "inferred")
+    )
     L.free(D, je, remaining, removed, explicit_now)
     if over is not D:
         L.free(over)
-    if with_delta:
-        return TripleStore(spark, out_df), new_justs, delta
-    return TripleStore(spark, out_df), new_justs
+    return new_justs, (add_rows, rm_rows)

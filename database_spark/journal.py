@@ -284,10 +284,7 @@ class Journal:
             )
             # the fold materialized the new delta; the one it replaced
             # is read by nothing this method returns
-            L.unprotect_and_free(prev)
-        # no engine owns the returned delta: it lives as long as the
-        # store that reads it (an engine frees only deltas it folded)
-        L.unprotect(store.delta)
+            L.free(prev)
         return store
 
     def commit(
@@ -611,7 +608,6 @@ class Journal:
                     f.result()  # re-raise into the full-rewrite fallback
 
             out_meta = dict(meta)
-            out_meta.pop("rows", None)  # the base's count, not this version's
             out_meta["has_named"] = has_named
             out_meta["compaction"] = {
                 "mode": "incremental",

@@ -368,21 +368,14 @@ def protected_checkpoint(df: DataFrame) -> DataFrame:
     return protect(checkpoint(df))
 
 
-def unprotect(df):
-    """Undo :func:`protect`: the artifacts live until :func:`free` or
-    :func:`sweep` releases them, or (local backend) until the frame is
-    garbage collected and the context cleaner drops its blocks."""
-    if df is not None:
-        _PROTECTED.difference_update(getattr(df, _ATTR, ()))
-        _PROTECTED_FILES.difference_update(getattr(df, _FATTR, ()))
-    return df
-
-
 def unprotect_and_free(df) -> None:
     """Drop a previously protected checkpoint: un-exempt its artifacts
     from :func:`sweep` and release them (store snapshot rotation)."""
-    if df is not None:
-        free(unprotect(df))
+    if df is None:
+        return
+    _PROTECTED.difference_update(getattr(df, _ATTR, ()))
+    _PROTECTED_FILES.difference_update(getattr(df, _FATTR, ()))
+    free(df)
 
 
 def sweep(spark) -> int:

@@ -813,13 +813,16 @@ class SparqlEngine:
         else:
             self._recompute_entailments()
 
-    def _apply(self, added=None, removed=None, added_has_named=None) -> None:
+    def _apply(self, added=None, removed=None, added_has_named=None, fresh=False) -> None:
         """Fold one write step into the store's delta (one delta-sized
-        job, see ``TripleStore.apply``) and own the new delta."""
-        self.store = self.store.apply(added, removed, added_has_named)
+        job, see ``TripleStore.apply``) and own the new delta: protected
+        until a later commit retires and frees it."""
+        from ..operators import lifecycle as L
+
+        self.store = self.store.apply(added, removed, added_has_named, fresh)
         d = self.store.delta
         if d is not None and all(d is not f for f in self._owned):
-            self._owned.append(d)
+            self._owned.append(L.protect(d))
 
     def _write(self, added=None, removed=None, added_has_named=None) -> None:
         """:meth:`_apply` plus changeset tracking: ``removed`` reports
@@ -840,9 +843,9 @@ class SparqlEngine:
         self._apply(added, removed, added_has_named)
 
     def _rewrite(self, store: TripleStore) -> None:
-        """Replace the store by a whole-store rewrite (CLEAR, closure):
-        its lineage may read this engine's snapshots, so the commit
-        rebuilds the base before it retires them."""
+        """Replace the store by a whole-store rewrite (CLEAR, DROP
+        ENTAILMENTS): its lineage may read this engine's snapshots, so
+        the commit rebuilds the base before it retires them."""
         self.store = store
         self._rewrote = True
         self._owned.extend(f for f in store.snaps if all(f is not o for o in self._owned))
@@ -851,18 +854,21 @@ class SparqlEngine:
         """Close one commit.  The base is rebuilt (one protected
         checkpoint, ``TripleStore.rebuilt``) only when the delta
         outgrew its bound, or when a rewrite left the store reading
-        this engine's snapshots through lineage.  Snapshots the new
+        this engine's snapshots through lineage; the engine protects the
+        rebuilt base's snapshot like a delta.  Snapshots the new
         store no longer reads are retired, and released one commit
         later: changeset deltas are delivered before the commit returns
         and must be consumed before the next commit (IChangeLog has the
         same in-commit delivery shape).  A released snapshot a tx or an
         in-flight read still pins is deferred until the last pin
         drops."""
+        from ..operators import lifecycle as L
+
         self._commit_count += 1
         st = self.store
         if (self._rewrote and self._owned) or st.delta_outgrew_base():
             self.store = st = st.rebuilt()
-            self._owned.extend(st.snaps)
+            self._owned.extend(L.protect(f) for f in st.snaps)
         self._rewrote = False
         live = {id(f) for f in st.snaps}
         retired = [f for f in self._owned if id(f) not in live]
@@ -1212,39 +1218,40 @@ class SparqlEngine:
         return matches
 
     def _tm_retract(self, deleted) -> None:
+        """DRed retraction: fold the statements it resurrects and the
+        unsupported inferences it removes into the delta.  A
+        resurrected key was removed by this very commit, so its
+        ``inferred`` type needs no lookup (``fresh``)."""
         from ..inference.rdfs import tm_retract
+        from ..operators import lifecycle as L
 
+        self._tm_justs, (tm_add, tm_rm) = tm_retract(self.store, self._tm_justs, deleted)
+        self._apply(added=tm_add, removed=tm_rm, fresh=True)
         if self._track_changes:
-            store, self._tm_justs, (tm_add, tm_rm) = tm_retract(
-                self.store, self._tm_justs, deleted, with_delta=True
-            )
             self._cs_track(added=tm_add, removed=tm_rm)
         else:
-            store, self._tm_justs = tm_retract(self.store, self._tm_justs, deleted)
-        self._rewrite(store)
+            L.free(tm_add, tm_rm)  # the fold materialized them
 
     def _recompute_entailments(self) -> None:
         """Re-derive the closure from the current explicit statements,
         refreshing the justification table that the retraction fast
-        path (``tm_retract``) consumes."""
+        path (``tm_retract``) consumes, and fold the inferred statements
+        it gained and lost into the delta — O(closure) to derive, as
+        before, but no full-store rewrite.  A gained statement is held
+        neither as explicit (the closure excludes explicit keys) nor as
+        inferred (it is new), so it needs no ``inferred`` lookup."""
         from ..inference.rdfs import rdfs_closure
         from ..store import EXPLICIT, TripleStore as TS
 
-        before_inf = None
-        if self._track_changes:
-            # inferred-statement delta: diff bounded to the inferred
-            # rows (explicit deltas are tracked by the op branches);
-            # O(closure), same order as the recompute itself
-            before_inf = self.store.df.where(F.col("inferred") != EXPLICIT)
         explicit = TS(self.store.spark, self.store.explicit())
-        store, self._tm_justs = rdfs_closure(explicit, with_justifications=True)
-        self._rewrite(store)
-        if before_inf is not None:
-            after_inf = self.store.df.where(F.col("inferred") != EXPLICIT)
-            self._cs_track(
-                added=self._stmt_join(after_inf, before_inf, anti=True),
-                removed=self._stmt_join(before_inf, after_inf, anti=True),
-            )
+        closure, self._tm_justs = rdfs_closure(explicit, with_justifications=True)
+        before = self.store.df.where(F.col("inferred") != EXPLICIT)
+        after = closure.df.where(F.col("inferred") != EXPLICIT)
+        gained = self._stmt_join(after, before, anti=True)
+        lost = self._stmt_join(before, after, anti=True)
+        if self._track_changes:
+            self._cs_track(added=gained, removed=lost)
+        self._apply(added=gained, removed=lost, fresh=True)
 
     def _update_one(self, op) -> None:
         spark = self.store.spark

@@ -24,8 +24,9 @@ Spark-native design (NOT a port):
   ``Journal.commit_delta`` writes) in which the latest write to a key
   wins.  Each commit folds into the delta at delta-sized cost
   (:meth:`TripleStore.apply`).  Every layout view reads
-  ``base ⋉̸ broadcast(delta keys) ∪ delta adds``, so bucket and id
-  filters still push into the base's parquet FileScan however many
+  ``base ⋉̸ delta keys ∪ delta adds`` (keys broadcast while the delta
+  is small), so bucket and id filters still push into the base's
+  parquet FileScan however many
   commits landed — the analog of the reference writing only dirty
   B+Tree pages at a commit point (``Journal.java``/``RWStrategy.java``)
   while readers keep their index prefix scans.  The base is rebuilt
@@ -140,16 +141,20 @@ class TripleStore:
     #: ot gt inferred op, one row per key written since the base
     delta: DataFrame | None = None
     delta_rows: int = 0
-    #: the protected checkpoints this store's frames read (a rebuilt
-    #: base's snapshot, the delta) — what a reader pins and what a
-    #: writer may free once no store reads them
+    #: the checkpoints this store's frames read (a rebuilt base's
+    #: snapshot, the delta) — what a reader pins and what a writer may
+    #: free once no store reads them
     snaps: tuple = ()
-    #: statement count, once known (cached by :meth:`base_rows`)
-    rows: int | None = None
 
     #: the base is rebuilt once the delta holds more rows than this
     #: fraction of it (see :meth:`delta_outgrew_base`)
     REBUILD_FRACTION = 0.125
+    #: a delta of at most this many rows has its keys broadcast to
+    #: every layout scan (~4 MB of (s,p,o,g) longs, under Spark's
+    #: default 10 MB broadcast threshold); a larger one, e.g. after a
+    #: bulk insert, leaves the anti-join to Spark's planner, so no
+    #: write can force a driver-side collect of unbounded size
+    BROADCAST_ROWS = 100_000
 
     # ---------------------------------------------------------------- build
     @staticmethod
@@ -303,10 +308,6 @@ class TripleStore:
                 flat.sortWithinPartitions("p", "s", "o").write.mode(
                     "overwrite"
                 ).parquet(path)
-            # the first write materialized the checkpoint: counting its
-            # blocks is cheap, and a loaded store then knows its size
-            # (the delta's rebuild bound) without a scan
-            meta["rows"] = flat.count()
             if self.has_named is None:
                 # settle it now, against the just-written parquet: the
                 # g-IS-NOT-NULL probe prunes on row-group null-count
@@ -449,7 +450,6 @@ class TripleStore:
             tdf,
             p_buckets=meta.get("p_buckets"),
             has_named=meta.get("has_named"),
-            rows=meta.get("rows"),
             s_df=s_df,
             s_buckets=s_buckets,
             o_df=o_df,
@@ -597,9 +597,9 @@ class TripleStore:
     def base_rows(self) -> int:
         """Statement count of the base (one count job, cached on it)."""
         b = self._base()
-        if b.rows is None:
-            b.rows = b.df.count()
-        return b.rows
+        if getattr(b, "_rows", None) is None:
+            b._rows = b.df.count()
+        return b._rows
 
     def delta_outgrew_base(self) -> bool:
         """True once the delta holds more rows than ``REBUILD_FRACTION``
@@ -614,10 +614,14 @@ class TripleStore:
         added: DataFrame | None = None,
         removed: DataFrame | None = None,
         added_has_named: bool | None = None,
+        fresh: bool = False,
     ) -> "TripleStore":
         """One commit's writes: retract ``removed``, then assert
         ``added`` (term-struct statement frames), folded into the delta
-        in ONE delta-sized job.
+        in ONE delta-sized job.  The new delta is an unprotected
+        checkpoint: it lives as long as the stores that read it, and
+        an owner that rotates deltas (the engine) protects and frees
+        them itself.
 
         Statement-set semantics per (s,p,o,g) key: the latest write
         wins, so remove-then-add revives a statement; ``inferred``
@@ -629,7 +633,9 @@ class TripleStore:
         ``added_has_named``: pass False/True when the caller knows
         whether ``added`` carries named-graph statements (INSERT DATA
         quads are enumerable driver-side) to keep the store's flag
-        settled without a scan."""
+        settled without a scan.  ``fresh=True``: the caller knows no key
+        of ``added`` is held by the store (a closure diff), so the
+        ``inferred`` dominance lookup against the store is skipped."""
         if added is None and removed is None:
             return self
         named = self.has_named
@@ -640,7 +646,7 @@ class TripleStore:
                 named = True
             elif not (self.has_named is False and added_has_named is False):
                 named = None  # would need a scan; settle lazily
-        delta, rows = self._fold(added, removed)
+        delta, rows = self._fold(added, removed, fresh)
         return self._base()._over(delta, rows, named)
 
     def add(self, other: DataFrame, other_has_named: bool | None = None) -> "TripleStore":
@@ -652,7 +658,7 @@ class TripleStore:
         a NULL g is the default graph."""
         return self.apply(removed=other)
 
-    def _fold(self, added, removed) -> tuple[DataFrame, int]:
+    def _fold(self, added, removed, fresh=False) -> tuple[DataFrame, int]:
         """``new ∪ (delta ⋉̸ new keys)`` as one aggregate over the old
         delta (src 0), this commit's removes (src 1) and adds (src 2),
         checkpointed and counted by the same job.  The frame is
@@ -663,7 +669,9 @@ class TripleStore:
         An insert that may carry inferred/axiom rows also reads the
         current statements held for its weak keys, so ``min`` sees the
         stronger type; an all-explicit frame skips that lookup, since
-        explicit already dominates."""
+        explicit already dominates, and so does a ``fresh`` one.  The
+        lookup's join is left to Spark's planner: the frame's size is
+        unknown without a job."""
         from .operators import lifecycle as L
 
         src = F.col("__src")
@@ -677,11 +685,11 @@ class TripleStore:
             new = _with_ids(added)
             parts.append(new.withColumn("op", F.lit(ADD).cast("tinyint"))
                          .withColumn("__src", F.lit(2)))
-            if "inferred" in added.columns:
+            if "inferred" in added.columns and not fresh:
                 weak = new.where(F.col("inferred") != EXPLICIT).select(
                     *[F.col(k).alias("__k" + k) for k in _KEY]
                 )
-                held = self._flat().join(F.broadcast(weak), _key_match("__k"), "left_semi")
+                held = self._flat().join(weak, _key_match("__k"), "left_semi")
                 parts.append(held.select(*_COLS).withColumn("op", F.lit(ADD).cast("tinyint"))
                              .withColumn("__src", F.lit(0)))
         u = parts[0]
@@ -703,20 +711,22 @@ class TripleStore:
             F.when(last == 2, F.lit(ADD)).when(last == 1, F.lit(REMOVE))
             .otherwise(F.col("__op")).cast("tinyint").alias("op"),
         )
-        delta = L.protect(L.checkpoint(folded, eager=False))
+        delta = L.checkpoint(folded, eager=False)
         # count the checkpoint's RDD, not the frame: the same job that
         # materializes the blocks, with no count-aggregate shuffle
         return delta, int(delta._jdf.queryExecution().toRdd().count())
 
     def _over(self, delta: DataFrame, rows: int, has_named) -> "TripleStore":
         """This base with ``delta`` read through every layout:
-        ``base ⋉̸ broadcast(delta keys) ∪ delta adds``, each add
-        carrying the layout's bucket column.  Bucket and id filters push
-        through the union and the anti-join's stream side into the
-        base's parquet FileScan, so pruning survives any number of
-        commits."""
+        ``base ⋉̸ delta keys ∪ delta adds``, each add carrying the
+        layout's bucket column.  Bucket and id filters push through the
+        union and the anti-join's stream side into the base's parquet
+        FileScan, so pruning survives any number of commits.  The keys
+        are broadcast only up to ``BROADCAST_ROWS``."""
         meta = self._layout_meta()
-        keys = F.broadcast(delta.select(*[F.col(k).alias("__k" + k) for k in _KEY]))
+        keys = delta.select(*[F.col(k).alias("__k" + k) for k in _KEY])
+        if rows <= self.BROADCAST_ROWS:
+            keys = F.broadcast(keys)
         adds = delta.where(F.col("op") == ADD).select(*_COLS)
 
         def view(frame, key=None):
@@ -741,8 +751,8 @@ class TripleStore:
         )
 
     def rebuilt(self) -> "TripleStore":
-        """Fold the delta into a new base: ONE protected checkpoint of
-        the merged primary layout (the journal commit-record analog —
+        """Fold the delta into a new base: ONE checkpoint of the merged
+        primary layout (the journal commit-record analog —
         reads start from a materialized snapshot, like the reference's
         B+Tree after a commit point).  The companion layouts become
         VIEWS of that snapshot with their bucket column recomputed: no
@@ -750,12 +760,12 @@ class TripleStore:
         to prune anyway, so the compiler's p-/s-/o-/g-layout paths stay
         live and the next full ``save()`` re-materializes them as
         pruned parquet.  Also truncates the lineage of a store a
-        whole-store rewrite (CLEAR, COPY, closure) derived from older
-        snapshots."""
+        whole-store rewrite (CLEAR) derived from older snapshots.  The
+        snapshot is unprotected, like a delta (see :meth:`apply`)."""
         from .operators import lifecycle as L
 
         meta = self._layout_meta()
-        snap = L.protected_checkpoint(self.df)
+        snap = L.checkpoint(self.df)
         flat = snap.drop("p_bucket") if "p_bucket" in snap.columns else snap
 
         def aux(key):

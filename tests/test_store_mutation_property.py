@@ -296,3 +296,92 @@ def test_engine_delta_crossing_rebuild_bound_keeps_answers(spark, tmp_path):
         assert s_rows == sum(1 for m in model if m[0] == EX + s)
     assert len(bases) == 2, "the delta must cross the rebuild bound exactly once"
     assert eng.store._base().snaps and eng.store.delta_rows <= 2
+
+
+def test_delta_over_broadcast_bound_is_not_broadcast(spark, tmp_path, monkeypatch):
+    """Delta keys are broadcast to the layout scans only while the
+    delta holds at most ``BROADCAST_ROWS`` rows.  A bulk
+    ``insert_dataframe`` past that bound leaves the anti-join to
+    Spark's planner, so no write can force an unbounded collect onto
+    the driver.  Spark's own size-based broadcast is switched off for
+    the plan checks, so a BroadcastExchange can only come from the
+    store's hint.  Every layout, a bound-subject SELECT and the base
+    rebuild keep the set model's answers."""
+    from database_spark.sparql.engine import SparqlEngine
+
+    monkeypatch.setattr(TripleStore, "BROADCAST_ROWS", 4)
+    path = str(tmp_path / "bulk")
+    base = [
+        (Term.iri(EX + f"s{i % 8}"), Term.iri(EX + f"p{i % 3}"), Term.integer(i))
+        for i in range(64)
+    ]
+    TripleStore.from_python_triples(spark, base).save(
+        path, partition_by_predicate=True, buckets=4
+    )
+    eng = SparqlEngine(TripleStore.load(spark, path))
+    base0 = eng.store
+    model = {(s.lex, p.lex, o.lex, o.dt or "", "") for s, p, o in base}
+
+    def insert(rows):
+        eng.insert_dataframe(T.terms_df(spark, rows, ["st", "pt", "ot"]))
+        model.update((s.lex, p.lex, o.lex, o.dt or "", "") for s, p, o in rows)
+
+    def broadcasts():
+        q = f"SELECT ?p ?o WHERE {{ <{EX}s1> ?p ?o }}"
+        frames = [eng.store.df, eng.store.s_df, eng.store.o_df, eng.select(q).df]
+        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            return [
+                f._jdf.queryExecution().executedPlan().toString().count("BroadcastExchange")
+                for f in frames
+            ]
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+    def check():
+        want = sorted(model)
+        assert _bag(eng.store.df) == want
+        assert _bag(eng.store.s_df) == want and _bag(eng.store.o_df) == want
+        got = eng.select(f"SELECT ?p ?o WHERE {{ <{EX}s1> ?p ?o }}").df.count()
+        assert got == sum(1 for m in model if m[0] == EX + "s1")
+
+    def bulk(lo, hi):
+        return [
+            (Term.iri(EX + f"s{i % 4}"), Term.iri(EX + "bulk"), Term.integer(i))
+            for i in range(lo, hi)
+        ]
+
+    insert(bulk(1000, 1002))  # 2 delta rows: keys broadcast
+    assert eng.store.delta_rows == 2 and all(n > 0 for n in broadcasts())
+    check()
+    insert(bulk(1002, 1007))  # 7 > BROADCAST_ROWS, under the 64/8 rebuild bound
+    assert eng.store._base() is base0 and eng.store.delta_rows == 7
+    assert broadcasts() == [0, 0, 0, 0]
+    check()
+    insert(bulk(1007, 1010))  # 10 > 8: the commit rebuilds the base
+    assert eng.store._base() is not base0 and eng.store.delta is None
+    check()
+
+
+def test_store_writes_outside_an_engine_protect_nothing(spark):
+    """``TripleStore.add``/``remove``/``rebuilt`` leave unprotected
+    checkpoints (they live as long as the frames that read them); only
+    an engine protects the snapshots it rotates."""
+    from database_spark.operators import lifecycle as L
+    from database_spark.sparql.engine import SparqlEngine
+
+    rng = random.Random(5)
+    uni = _universe(rng, 12)
+    before = (set(L._PROTECTED), set(L._PROTECTED_FILES))
+    st = TripleStore.from_python_triples(spark, uni[:8])
+    st = st.add(_frame(spark, uni[8:])).remove(_frame(spark, uni[:2]))
+    rebuilt = st.rebuilt()
+    assert (set(L._PROTECTED), set(L._PROTECTED_FILES)) == before
+    assert _bag(rebuilt.df) == _bag(st.df)
+    eng = SparqlEngine(st)
+    eng.insert_dataframe(_frame(spark, uni[:2]))  # crosses the rebuild bound
+    assert eng.store.snaps
+    for snap in eng.store.snaps:
+        owned = getattr(snap, L._ATTR, set()) | getattr(snap, L._FATTR, set())
+        assert owned and owned <= (L._PROTECTED | L._PROTECTED_FILES)
