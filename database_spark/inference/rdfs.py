@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from .. import terms as T
 from ..operators import lifecycle as L
-from ..operators.iterate import fixpoint_rounds
+from ..operators.iterate import seminaive_fixpoint
 from ..store import EXPLICIT, INFERRED, TripleStore
 
 RDF_TYPE = T.Term.iri(T.RDF + "type")
@@ -96,15 +96,11 @@ def rdfs_closure(
     table is complete, not just first-proof."""
     spark = store.spark
     base = store.df.where(F.col("g").isNull()).select("s", "p", "o", "st", "pt", "ot")
-    # The closure total is a lazy union of the base checkpoint and the
-    # per-round delta checkpoints; each round runs ONE action — an
-    # aggregate over the round's lazily-checkpointed delta that
-    # materializes it and returns its row count AND its schema-triple
-    # pairs (the rule-activation probe) together.  The old shape paid
-    # four barriers a round: probe collect, delta checkpoint, isEmpty,
-    # and an O(closure) union re-materialization.
-    total = L.checkpoint(base)
-    layers = [total]
+    # the closure is a lazy union of the base checkpoint and one layer
+    # per round (``seminaive_fixpoint``); a round's single action also
+    # collects its new schema pairs for the next round's activation
+    # probe, so a round pays one barrier
+    seed = L.checkpoint(base)
 
     def head_df(df: DataFrame, cols: list, prem=None) -> DataFrame:
         sel = cols + ([prem.alias("prem")] if prem is not None else [])
@@ -146,11 +142,11 @@ def rdfs_closure(
         (r["p"], r["o"])
         for r in base.select("p", "o").where(probe_cond).distinct().collect()
     }
-    for _ in fixpoint_rounds(max_iter, "rdfs_closure"):
-        t = layers[0]
-        for l in layers[1:]:
-            t = t.unionByName(l)
-        total = t
+    last_fires = None  # complete on the final (empty-delta) round
+
+    def fire(t: DataFrame, _delta) -> DataFrame | None:
+        """One round: every active rule over the closure so far ``t``."""
+        nonlocal last_fires
         pvals = {p for p, _ in present}
         active = {name for name, pid in schema_ids.items() if pid in pvals}
         if (type_id, sym_id) in present:
@@ -158,7 +154,7 @@ def rdfs_closure(
         if (type_id, tr_id) in present:
             active.add("trans")
         if not active:
-            break
+            return None
 
         # schema-level frames (small → broadcast by Catalyst/AQE)
         subp = t.where(F.col("p") == _pid(SUBPROP)).select(
@@ -392,31 +388,14 @@ def rdfs_closure(
         fires = heads[0]
         for h in heads[1:]:
             fires = fires.unionByName(h)
-        last_fires = fires  # complete on the final (empty-delta) round
-        new = L.lazy_checkpoint(
-            fires.select("s", "p", "o", "st", "pt", "ot")
-            .dropDuplicates(["s", "p", "o"]).join(
-                total.select("s", "p", "o"), ["s", "p", "o"], "left_anti"
-            )
-        )
-        # ONE action: materializes the delta checkpoint, counts it, and
-        # collects its schema pairs for next round's activation probe
-        row = new.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(
-                F.when(probe_cond, F.struct("p", "o"))
-            ).alias("sch"),
-        ).first()
-        if row["n"] == 0:
-            L.free(new)
-            break
-        present |= {(x["p"], x["o"]) for x in row["sch"]}
-        layers.append(new)
-        layers = L.compact_layers(layers)
-    total = layers[0]
-    for l in layers[1:]:
-        total = total.unionByName(l)
-    total = L.adopt(total, *layers)
+        last_fires = fires
+        return fires.select("s", "p", "o", "st", "pt", "ot")
+
+    total = seminaive_fixpoint(
+        [seed], fire, ["s", "p", "o"], max_iter, "rdfs_closure",
+        extra=(F.collect_set(F.when(probe_cond, F.struct("p", "o"))).alias("sch"),),
+        on_round=lambda row: present.update((x["p"], x["o"]) for x in row["sch"]),
+    )
 
     explicit_keys = store.df.where(F.col("g").isNull()).select("s", "p", "o")
     inferred = total.join(
@@ -430,7 +409,8 @@ def rdfs_closure(
         F.lit(None).cast(T.TERM_TYPE).alias("gt"),
         F.lit(INFERRED).cast("tinyint").alias("inferred"),
     ).select("s", "p", "o", "g", "st", "pt", "ot", "gt", "inferred")
-    out_store = TripleStore(spark, store.df.unionByName(inferred))
+    # the closure frame owns the loop's layers: L.free(out.df) releases them
+    out_store = TripleStore(spark, L.adopt(store.df.unionByName(inferred), total))
     if not with_justifications:
         return out_store
     # justification table: every derivation of every statement —
@@ -439,10 +419,9 @@ def rdfs_closure(
     # (StatementEnum demotion to Inferred).  The last loop round ran
     # all active rules over the converged closure, so `last_fires`
     # enumerates the complete proof set.
-    if "last_fires" in locals():
+    if last_fires is not None:
         justs = L.checkpoint(
-            last_fires.select("s", "p", "o", "prem")  # noqa: F821
-            .dropDuplicates()
+            last_fires.select("s", "p", "o", "prem").dropDuplicates()
         )
     else:  # no schema → no rules ever fired
         justs = spark.createDataFrame([], JUST_SCHEMA)
@@ -503,9 +482,6 @@ def tm_retract(
         )
     )
 
-    def keys(df, names=("s", "p", "o")):
-        return df.select(*names)
-
     # -- 1. overdelete: transitively mark statements that have SOME
     # justification consuming a deleted/overdeleted statement.  An
     # EXPLICITLY asserted statement never loses support, so the walk
@@ -515,18 +491,14 @@ def tm_retract(
         .select("s", "p", "o")
         .dropDuplicates()
     )
-    # one checkpoint_count action per round; the over set is a lazy
-    # union of D and the per-round layers (see rdfs_closure)
-    over_layers: list = []
-    frontier = D
-    for _ in fixpoint_rounds(max_iter, "tm_overdelete"):
+
+    # D is known to the walk but stays owned here: it is read again
+    # after the loop, so layer compaction must never free it
+    def overdelete(_over, frontier):
         f = frontier.select(
             F.col("s").alias("fs"), F.col("p").alias("fp"), F.col("o").alias("fo")
         )
-        over_keys = D
-        for l in over_layers:
-            over_keys = over_keys.unionByName(l)
-        hit = (
+        return (
             je.join(
                 f,
                 (F.col("qs") == F.col("fs"))
@@ -537,29 +509,14 @@ def tm_retract(
             .dropDuplicates()
             .join(explicit_now, ["s", "p", "o"], "left_anti")
         )
-        new, nn = L.checkpoint_count(hit.join(over_keys, ["s", "p", "o"], "left_anti"))
-        if nn == 0:
-            L.free(new)
-            break
-        over_layers.append(new)
-        over_layers = L.compact_layers(over_layers)
-        frontier = new
-    over = D
-    for l in over_layers:
-        over = over.unionByName(l)
-    if over_layers:
-        over = L.adopt(over, *over_layers)  # D keeps its own ownership
+
+    over = seminaive_fixpoint(
+        [], overdelete, ["s", "p", "o"], max_iter, "tm_overdelete", known=(D,)
+    )
 
     # -- 2. rederive: a statement in `over` survives if some
     # justification has ALL premises outside the final removed set
-    total_keys = store.df.where(F.col("g").isNull()).select("s", "p", "o")
-    rem_layers = [L.checkpoint(
-        total_keys.join(over, ["s", "p", "o"], "left_anti").dropDuplicates()
-    )]
-    for _ in fixpoint_rounds(max_iter, "tm_rederive"):
-        remaining = rem_layers[0]
-        for l in rem_layers[1:]:
-            remaining = remaining.unionByName(l)
+    def rederive(remaining, _delta):
         rem = remaining.select(
             F.col("s").alias("rs"), F.col("p").alias("rp"), F.col("o").alias("ro")
         )
@@ -574,25 +531,20 @@ def tm_retract(
             .select("jid")
             .dropDuplicates()
         )
-        good_heads = (
+        return (
             je.select("s", "p", "o", "jid")
             .dropDuplicates()
             .join(bad_jids, "jid", "left_anti")
             .select("s", "p", "o")
-            .dropDuplicates()
         )
-        add, na = L.checkpoint_count(
-            good_heads.join(remaining, ["s", "p", "o"], "left_anti")
-        )
-        if na == 0:
-            L.free(add)
-            break
-        rem_layers.append(add)
-        rem_layers = L.compact_layers(rem_layers)
-    remaining = rem_layers[0]
-    for l in rem_layers[1:]:
-        remaining = remaining.unionByName(l)
-    remaining = L.adopt(remaining, *rem_layers)
+
+    total_keys = store.df.where(F.col("g").isNull()).select("s", "p", "o")
+    remaining = seminaive_fixpoint(
+        [L.checkpoint(
+            total_keys.join(over, ["s", "p", "o"], "left_anti").dropDuplicates()
+        )],
+        rederive, ["s", "p", "o"], max_iter, "tm_rederive",
+    )
 
     removed = L.checkpoint(
         over.join(remaining, ["s", "p", "o"], "left_anti")
@@ -651,7 +603,6 @@ def tm_retract(
     add_rows = L.checkpoint(
         resurrected.select("st", "pt", "ot", "gt", "inferred")
     )
-    L.free(D, je, remaining, removed, explicit_now)
-    if over is not D:
-        L.free(over)
+    # `over` is D itself when the walk found nothing: free is idempotent
+    L.free(D, over, je, remaining, removed, explicit_now)
     return new_justs, (add_rows, rm_rows)

@@ -21,14 +21,13 @@ skew is split by AQE.
 from __future__ import annotations
 
 import itertools
-import os
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import lifecycle as L
-from .iterate import fixpoint_rounds
+from .iterate import fused_fixpoint
 
 #: unique suffixes for the per-loop temp views `_loop_views` registers
 #: (concurrent loops in one session must not collide)
@@ -64,137 +63,6 @@ def _loop_views(spark, names: list[str]):
 #: 100 TB path.
 SMALL_GRAPH_EDGES = 512
 SMALL_SEED_SET = 1024
-
-#: multi-round fusion for convergence-tested fixpoints (r12 verdict
-#: next-round #4): chain up to this many rounds of lazy checkpoints and
-#: materialize + convergence-test them with ONE action (a union of the
-#: per-round convergence aggregates), dividing the loop's driver/job
-#: barriers by the block size.  Fusion trades barriers for potentially
-#: WASTED rounds: quiescence is detected up to k-1 rounds late, and a
-#: post-quiescence round still shuffles the whole O(V) state — cheap on
-#: a small state, ruinous on a 100 TB one.  So fusion is DATA-GATED:
-#: it only engages while the measured state row count (returned by the
-#: previous block's own convergence aggregate, no extra job) is at or
-#: below GAS_FUSE_MAX_ROWS; above it the loop degrades to the exact
-#: one-action-per-round shape, whose convergence test is free.  The
-#: detected round count stays EXACT in both modes: the fused action
-#: returns per-round new-row counts, so quiescence is attributed to the
-#: precise round it happened in (stats["rounds"]/max_rounds semantics
-#: are bit-identical to the unfused loop).
-GAS_FUSE_ROUNDS = max(1, int(os.environ.get("SPARK_GRAFT_GAS_FUSE", "4")))
-GAS_FUSE_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_GAS_FUSE_MAX_ROWS", str(4_000_000))
-)
-
-
-def _fused_fixpoint(
-    owner: DataFrame,
-    step,
-    advanced,
-    state_of,
-    frontier_of,
-    max_iter: int | None,
-    max_rounds: int | None,
-    label: str,
-    first_free: tuple = (),
-):
-    """Drive a convergence-tested fixpoint with data-adaptive round
-    fusion (see GAS_FUSE_ROUNDS).
-
-    ``owner``: the (lazily) checkpointed initial state; ``step(state,
-    frontier, round_no)`` builds round ``round_no``'s aggregate plan
-    (NOT yet checkpointed); ``advanced(agg)`` is the boolean Column
-    marking rows that advanced this round (its count is the
-    convergence test); ``state_of(agg)`` / ``frontier_of(agg, adv)``
-    project the next round's inputs.  ``first_free``: frames consumed
-    by round 1's plan that become releasable once the first block
-    materializes (e.g. the pre-shuffle edge checkpoint).
-
-    Returns ``(owner, state, rounds)`` where ``owner`` is the final
-    checkpointed frame (convergence-quiescent, value-identical to the
-    unfused loop's final state), ``state`` its state projection
-    (``state_of(owner)`` after ≥1 round, the initial state verbatim
-    for a zero-round exit — the initial frame need not carry the
-    aggregate's marker columns) and ``rounds`` the exact round count
-    including the quiescence-detection round — the same accounting as
-    the one-action-per-round loop."""
-    rounds = 0
-    state = frontier = owner
-    it = fixpoint_rounds(max_iter, label)
-    pend = [f for f in first_free if f is not None]
-    state_rows = None
-    while True:
-        if max_rounds is not None and rounds >= max_rounds:
-            break
-        k = (
-            GAS_FUSE_ROUNDS
-            if state_rows is not None and state_rows <= GAS_FUSE_MAX_ROWS
-            else 1
-        )
-        if max_rounds is not None:
-            k = min(k, max_rounds - rounds)
-        if max_iter is not None:
-            if rounds >= max_iter:
-                next(it)  # raises: no fixpoint within max_iter
-            k = min(k, max_iter - rounds)
-        block: list = []
-        counts: list = []
-        for j in range(k):
-            next(it)
-            rounds += 1
-            # every round keeps its own lazy checkpoint: the plan
-            # TRUNCATION is load-bearing, not just the reuse — a step
-            # that references its state s times (CC references the edge
-            # set ~6 times per alternation) would otherwise grow the
-            # chained block plan s^k-fold and stall Catalyst (measured:
-            # gas_cc_large analysis ran 15+ minutes with persist()-only
-            # intermediates).  The ~130 ms/round plan→RDD conversion is
-            # the price of a bounded analyzer input.
-            agg = L.lazy_checkpoint(step(state, frontier, rounds))
-            adv = advanced(agg)
-            counts.append(
-                agg.agg(
-                    F.sum(F.when(adv, 1)).alias("n"),
-                    F.count(F.lit(1)).alias("total"),
-                ).select(F.lit(j).alias("j"), "n", "total")
-            )
-            block.append(agg)
-            state = state_of(agg)
-            frontier = frontier_of(agg, adv)
-        u = counts[0]
-        for c in counts[1:]:
-            u = u.unionByName(c)
-        # the block's single action: materializes every chained round
-        # checkpoint and returns each round's convergence count
-        rows = {int(r["j"]): r for r in u.collect()}
-        stop = None
-        for j in range(len(block)):
-            if int(rows[j]["n"] or 0) == 0:
-                stop = j
-                break
-        last = stop if stop is not None else len(block) - 1
-        keep = block[last]
-        state_rows = int(rows[last]["total"] or 0)
-        L.free(owner, *[a for i, a in enumerate(block) if i != last])
-        if pend:
-            L.free(*pend)
-            pend = []
-        owner = keep
-        state = state_of(keep)
-        frontier = frontier_of(keep, advanced(keep))
-        if stop is not None:
-            # quiescence happened in block round ``stop``: rounds past
-            # it computed (and we discarded) identical state — report
-            # the exact count the unfused loop would have
-            rounds -= len(block) - 1 - stop
-            break
-    if pend:
-        # zero-round exit (max_rounds=0): nothing materialized, and the
-        # result depends only on the initial state — release the
-        # round-plan inputs
-        L.free(*pend)
-    return owner, state, rounds
-
 
 def _input_parts(df: DataFrame) -> int:
     """Loop partition count DERIVED from the operator's input without
@@ -373,7 +241,7 @@ def bfs(
                 f") GROUP BY node"
             )
 
-        owner, visited, _ = _fused_fixpoint(
+        owner, visited, _ = fused_fixpoint(
             owner,
             step,
             advanced=lambda agg: F.col("new") == 1,
@@ -458,7 +326,7 @@ def sssp(
         improved = lambda agg: F.col("old").isNull() | (  # noqa: E731
             F.col("dist") < F.col("old")
         )
-        owner, dist, _ = _fused_fixpoint(
+        owner, dist, _ = fused_fixpoint(
             owner,
             step,
             advanced=improved,
@@ -613,7 +481,7 @@ def multi_sssp(
         improved = lambda agg: F.col("old").isNull() | (  # noqa: E731
             F.col("dist") < F.col("old")
         )
-        owner, dist, rounds = _fused_fixpoint(
+        owner, dist, rounds = fused_fixpoint(
             owner,
             step,
             advanced=improved,
@@ -739,7 +607,7 @@ def connected_components(
                 f" FROM tagged GROUP BY u, v"
             )
 
-        owner, E, rounds = _fused_fixpoint(
+        owner, E, rounds = fused_fixpoint(
             E,
             step,
             # convergence ⟺ the edge sets are identical ⟺ no row is in

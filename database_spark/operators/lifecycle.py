@@ -1,8 +1,9 @@
 """Checkpoint lifecycle for iterative operators — two backends.
 
 Every fixpoint in this engine (property-path closure, GAS, RDFS
-closure), the store's commit delta, and rebuilt-base snapshots
-persist round state through :func:`checkpoint`.  Two backends:
+closure — driven by :mod:`.iterate`), the store's commit delta, and
+rebuilt-base snapshots persist round state through :func:`checkpoint`.
+Two backends:
 
 * **local** (default): ``df.localCheckpoint()`` — blocks live in the
   executors' block manager.  Fast, zero configuration, and exactly
@@ -39,6 +40,13 @@ every checkpoint an owner:
   the session.  Call between queries AFTER the previous result has
   been fully consumed (bench.py does); results freed by sweep cannot
   be re-collected.
+
+"Lazy" (``eager=False``) checkpoints defer only the final stage.
+:func:`checkpoint` pre-warms the plan→RDD conversion, and with AQE on
+(anywhere outside :func:`loop_exec`, e.g. the RDFS and truth
+maintenance loops) that conversion runs the plan's shuffle stages as
+jobs at checkpoint time; only the last stage fuses into the first
+action that reads the checkpoint.
 
 Reference parity note: the reference's query engine releases native
 buffers per-query through ``IRunningQuery`` lifecycle hooks; this
@@ -179,11 +187,16 @@ def checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
 
 def lazy_checkpoint(df: DataFrame) -> DataFrame:
     """Checkpoint whose materialization is deferred to the FIRST action
-    that reads it (typically the next fixpoint round's
-    :func:`checkpoint_count` job, which fuses the parent state's
-    finalization into the round it already runs).  The caller must not
-    :func:`free` the inputs this plan reads until it has provably been
-    materialized — see the pending-free pattern in the fixpoint loops."""
+    that reads it (typically the fixpoint round's own sizing action, or
+    the next round's, which fuses the parent state's finalization into
+    the round it already runs).  The caller must not :func:`free` the
+    inputs this plan reads until it has provably been materialized —
+    see the pending-free pattern in the fixpoint loops.
+
+    Under AQE the deferral covers only the final stage: the pre-warm in
+    :func:`checkpoint` runs the plan's shuffle stages as jobs right
+    here (see the module docstring).  Inside :func:`loop_exec` (AQE
+    off) nothing runs until the first action."""
     return checkpoint(df, eager=False)
 
 
@@ -214,9 +227,7 @@ def loop_exec(spark, partitions: int | None = None):
     them.  ``partitions`` must come from the operator's input
     partitioning (e.g. the AQE-sized checkpoint of the edge set: a
     bench graph gets a handful, a 100 TB edge set keeps its thousands)
-    — NEVER from the local core count.  Set ``SPARK_GRAFT_LOOP_AQE=1``
-    to keep AQE inside loops (escape hatch for frontiers too large to
-    broadcast over heavily skewed clusters).
+    — NEVER from the local core count.
 
     Conf changes are session-visible while the loop runs (documented
     trade: a concurrent query planned in that window gets a static
@@ -232,9 +243,6 @@ def loop_exec(spark, partitions: int | None = None):
     set by inner/concurrent loops still apply (last-set-wins while any
     loop runs — each loop's rounds replan every iteration, so each
     picks up its own setting on its next round)."""
-    if os.environ.get("SPARK_GRAFT_LOOP_AQE") == "1":
-        yield
-        return
     conf = spark.conf
     key = id(spark)
     with _LOOP_LOCK:
@@ -271,30 +279,6 @@ def loop_exec(spark, partitions: int | None = None):
                     "spark.sql.autoBroadcastJoinThreshold", st["bcast"]
                 )
                 _LOOP_STATE.pop(key, None)
-
-
-#: append-only fixpoint state (BFS visited, closure totals) is kept as
-#: a lazy union of per-round layer checkpoints; past this many layers
-#: the head is merged into ONE checkpoint so the union plan stays
-#: bounded and (reliable backend) the rdd-* dir count stays constant
-COMPACT_LAYERS = 8
-
-
-def compact_layers(layers: list) -> list:
-    """Bound a fixpoint loop's layer list: merge all but the last
-    layer (the live frontier, which the next round still probes on its
-    own) into one eager checkpoint and free the merged pieces.  One
-    extra job every COMPACT_LAYERS rounds buys O(1) plan size and
-    checkpoint-artifact count for arbitrarily long fixpoints."""
-    if len(layers) <= COMPACT_LAYERS:
-        return layers
-    head = layers[:-1]
-    merged = head[0]
-    for l in head[1:]:
-        merged = merged.unionByName(l)
-    out = checkpoint(merged)  # eager: inputs freeable immediately after
-    free(*head)
-    return [out, layers[-1]]
 
 
 def adopt(df: DataFrame, *owners) -> DataFrame:

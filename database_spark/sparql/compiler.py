@@ -33,7 +33,6 @@ from . import ast as A
 from .functions import (
     ExprCompiler,
     SparqlCompileError,
-    _is_simple,
     _let,
     dt_rank,
     ebv,
@@ -1734,7 +1733,9 @@ class Compiler:
         sol, repl = self._bind_exists_markers(sol, expr, graph)
         ec = ExprCompiler(self.resolver(sol, visible), repl, heavy=self._heavy_vars)
         t = ec.term(expr)
-        if not _is_simple(expr):
+        # ec._simple, not _is_simple: BIND(?h AS ?y) of a heavy ?h makes
+        # ?y heavy too, or Catalyst substitutes ?h's tree through it
+        if not ec._simple(expr):
             self._heavy_vars.add(name)
         if name in sol.vars:
             existing = F.col(name)
@@ -2372,7 +2373,7 @@ class Compiler:
             if expr is not None:
                 ec = ExprCompiler(self.resolver(sol), agg_pairs=agg_repl, heavy=self._heavy_vars)
                 t = ec.term(expr)
-                if not _is_simple(expr):
+                if not ec._simple(expr):
                     self._heavy_vars.add(var.name)
                 df = sol.df.withColumn(var.name, t).withColumn(
                     var.name + "__id",
@@ -2385,9 +2386,7 @@ class Compiler:
             sec = ExprCompiler(self.resolver(s), agg_pairs=agg_repl, heavy=self._heavy_vars)
             for expr, asc in q.order_by:
                 t = sec.term(expr)
-                if _is_simple(expr) and not (
-                    isinstance(expr, A.Var) and expr.name in self._heavy_vars
-                ):
+                if sec._simple(expr):
                     keys = T.sort_key(t)
                 else:
                     # computed sort term: sort_key fans its input out
@@ -2483,7 +2482,7 @@ class Compiler:
         for i, g in enumerate(q.group_by):
             if isinstance(g, tuple):
                 expr, var = g
-                if not _is_simple(expr):
+                if not ec._simple(expr):
                     self._heavy_vars.add(var.name)
                 df = df.withColumn(var.name, ec.term(expr)).withColumn(
                     var.name + "__id",

@@ -1,14 +1,12 @@
 """Regression tests for round-1 advisor findings (ADVICE.md r1):
-DISTINCT+ORDER BY ordering, RDFterm-equal across categories, fixpoint
-truncation, EXISTS-marker join with maybe-unbound vars, null booleans
-in rdfize."""
+DISTINCT+ORDER BY ordering, RDFterm-equal across categories,
+EXISTS-marker join with maybe-unbound vars, null booleans in rdfize.
+(The fixpoint truncation tests live in test_iterate.py.)"""
 
 import pytest
 from pyspark.sql import functions as F
 
 from database_spark import terms as T
-from database_spark.operators.graph import bfs
-from database_spark.operators.iterate import fixpoint_rounds
 from database_spark.sparql.engine import SparqlEngine
 from database_spark.store import RdfMapping, TripleStore, rdfize
 from database_spark.terms import Term
@@ -92,29 +90,6 @@ def test_exists_marker_with_maybe_unbound_var(engine):
     # the rest have ?f unbound → free var → non-empty pattern.
     # exactly once each — the null-compatible join must not multiply rows
     assert got == [("Alice",), ("Alice",), ("Bob",), ("Bob",), ("Carol",), ("Dave",)]
-
-
-def test_fixpoint_rounds_raises_at_cap():
-    it = fixpoint_rounds(3, "unit")
-    assert [next(it) for _ in range(3)] == [0, 1, 2]
-    with pytest.raises(RuntimeError, match="no fixpoint after 3"):
-        next(it)
-
-
-def test_bfs_runs_to_fixpoint_and_raises_on_cap(spark, monkeypatch):
-    # 4-node chain 0→1→2→3
-    edges = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "src long, dst long")
-    seeds = spark.createDataFrame([(0,)], "node long")
-    out = {r["node"]: r["depth"] for r in bfs(edges, seeds).collect()}
-    assert out == {0: 0, 1: 1, 2: 2, 3: 3}
-    # the iteration cap only governs the DISTRIBUTED frontier walk —
-    # the driver-local small-graph path is exact by construction, so
-    # force the distributed path to exercise the truncation guard
-    from database_spark.operators import graph as G
-
-    monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 0)
-    with pytest.raises(RuntimeError, match="bfs: no fixpoint"):
-        bfs(edges, seeds, max_iter=2)
 
 
 def test_rdfize_null_boolean_skipped(spark):

@@ -105,12 +105,12 @@ def test_bfs_identical_across_backends(spark, reliable_dir):
     got = sorted(
         tuple(r) for r in bfs(edges, seeds, max_iter=100).collect()
     )
-    # the result owns its per-round layer checkpoints (lazy-union
-    # design, r12): the artifact count must stay BOUNDED by the layer
-    # compaction constant regardless of round count — a 45-round BFS
-    # may leave at most COMPACT_LAYERS+1 layer dirs plus the seed's
-    assert len(_rdd_dirs(reliable_dir)) <= L.COMPACT_LAYERS + 2, (
-        "fixpoint layer compaction must bound reliable checkpoint dirs"
+    # BFS runs on the rewrite driver (iterate.fused_fixpoint), which
+    # frees every earlier round's state and the edge checkpoint as it
+    # goes: however many rounds ran, the result owns exactly one
+    # artifact, its final state checkpoint
+    assert len(_rdd_dirs(reliable_dir)) == 1, (
+        "a rewrite fixpoint must leave only its result's checkpoint dir"
     )
     L.sweep(spark)
     assert _rdd_dirs(reliable_dir) == set()

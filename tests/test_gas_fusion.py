@@ -7,12 +7,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from database_spark.operators import graph as G
+from database_spark.operators import iterate as I
 from database_spark.operators import lifecycle as L
 
 
 def _jobs(spark) -> int:
-    sc = spark.sparkContext
-    return sc._jsc.sc().statusStore().jobsList(None).size()
+    """Id of the newest job (the list is newest first).  Job ids are
+    sequential, so two readings differ by the jobs run in between; the
+    list's size is no counter, as the store trims it past
+    spark.ui.retainedJobs."""
+    jl = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return jl.apply(0).jobId() if jl.size() else -1
 
 
 def _chain_edges(spark, n: int):
@@ -26,7 +31,7 @@ def _chain_edges(spark, n: int):
 @pytest.fixture()
 def fusion_gate(monkeypatch):
     """Force the distributed path for small fixtures and let tests flip
-    the fusion gate without touching env."""
+    the fusion gate constants."""
     monkeypatch.setattr(G, "SMALL_GRAPH_EDGES", 4)
     yield monkeypatch
 
@@ -34,9 +39,9 @@ def fusion_gate(monkeypatch):
 def test_fused_equals_unfused_bfs(spark, fusion_gate):
     e = _chain_edges(spark, 11)
     seeds = spark.sql("SELECT CAST(0 AS BIGINT) AS node")
-    fusion_gate.setattr(G, "GAS_FUSE_ROUNDS", 4)
+    fusion_gate.setattr(I, "GAS_FUSE_ROUNDS", 4)
     fused = sorted((r["node"], r["depth"]) for r in G.bfs(e, seeds).collect())
-    fusion_gate.setattr(G, "GAS_FUSE_ROUNDS", 1)
+    fusion_gate.setattr(I, "GAS_FUSE_ROUNDS", 1)
     unfused = sorted((r["node"], r["depth"]) for r in G.bfs(e, seeds).collect())
     assert fused == unfused == [(i, i) for i in range(12)]
     L.sweep(spark)
@@ -51,7 +56,7 @@ def test_fused_rounds_accounting_exact(spark, fusion_gate):
     seeds = spark.sql("SELECT CAST(0 AS BIGINT) node, CAST(0 AS BIGINT) seed")
     out = {}
     for k in (1, 3, 4, 5):
-        fusion_gate.setattr(G, "GAS_FUSE_ROUNDS", k)
+        fusion_gate.setattr(I, "GAS_FUSE_ROUNDS", k)
         stats = {}
         rows = G.multi_sssp(e, seeds, max_iter=50, stats=stats).collect()
         out[k] = (stats["rounds"], sorted((r["node"], r["dist"]) for r in rows))
@@ -65,7 +70,7 @@ def test_fused_rounds_accounting_exact(spark, fusion_gate):
 def test_fusion_respects_max_rounds_and_max_iter(spark, fusion_gate):
     e = _chain_edges(spark, 11).withColumn("weight", F.lit(1.0))
     seeds = spark.sql("SELECT CAST(0 AS BIGINT) node, CAST(0 AS BIGINT) seed")
-    fusion_gate.setattr(G, "GAS_FUSE_ROUNDS", 4)
+    fusion_gate.setattr(I, "GAS_FUSE_ROUNDS", 4)
     # max_rounds truncates cleanly at a non-block-aligned count
     stats = {}
     rows = G.multi_sssp(e, seeds, max_rounds=5, stats=stats).collect()
@@ -81,14 +86,14 @@ def test_fusion_data_gate_and_action_count(spark, fusion_gate):
     e = _chain_edges(spark, 9)
     seeds = spark.sql("SELECT CAST(0 AS BIGINT) AS node")
     # gate CLOSED (state bigger than the cap): one action per round
-    fusion_gate.setattr(G, "GAS_FUSE_ROUNDS", 4)
-    fusion_gate.setattr(G, "GAS_FUSE_MAX_ROWS", 0)
+    fusion_gate.setattr(I, "GAS_FUSE_ROUNDS", 4)
+    fusion_gate.setattr(I, "GAS_FUSE_MAX_ROWS", 0)
     j0 = _jobs(spark)
     gated = sorted(r["depth"] for r in G.bfs(e, seeds).collect())
     gated_jobs = _jobs(spark) - j0
     L.sweep(spark)
     # gate OPEN: blocks of 4 rounds share one action — strictly fewer
-    fusion_gate.setattr(G, "GAS_FUSE_MAX_ROWS", 10_000)
+    fusion_gate.setattr(I, "GAS_FUSE_MAX_ROWS", 10_000)
     j0 = _jobs(spark)
     fused = sorted(r["depth"] for r in G.bfs(e, seeds).collect())
     fused_jobs = _jobs(spark) - j0

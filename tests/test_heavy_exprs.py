@@ -111,3 +111,32 @@ def test_plan_size_bounded_for_bind_filter(spark, eng):
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     assert len(plan) < 60_000, f"plan blew up to {len(plan)} chars"
+
+
+def test_aliasing_bind_of_heavy_var_is_heavy(eng, monkeypatch):
+    """BIND(?h AS ?y) of a heavy ?h makes ?y heavy too: Catalyst's
+    project collapse substitutes ?h's defining tree through the alias,
+    so references to ?y need the same single embedding.  An alias of a
+    plain scan var stays plain."""
+    built = []
+    real = eng._compiler
+
+    def spy(*a, **k):
+        built.append(real(*a, **k))
+        return built[-1]
+
+    monkeypatch.setattr(eng, "_compiler", spy)
+    q = """
+    SELECT ?y ?z WHERE {
+      ?n <urn:t:key> ?k .
+      BIND(STRLEN(STR(?k)) AS ?h)
+      BIND(?h AS ?y)
+      BIND(?k AS ?z)
+    }
+    """
+    rows = eng.select(q).df.collect()
+    heavy = built[-1]._heavy_vars
+    assert {"h", "y"} <= heavy and "z" not in heavy
+    assert sorted((int(r["z"]["lex"]), int(r["y"]["lex"])) for r in rows) == [
+        (i, len(str(i))) for i in range(30)
+    ]

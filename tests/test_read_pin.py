@@ -37,12 +37,21 @@ def _count(df):
     return int(df.collect()[0][0]["lex"])
 
 
+def _owned_attr(df) -> str:
+    """The ownership attribute the active checkpoint backend fills:
+    persistent RDD ids (local) or ``rdd-*`` dirs (reliable)."""
+    if getattr(df, "_dbspark_ckpt_files", None):
+        return "_dbspark_ckpt_files"
+    return "_dbspark_ckpt_ids"
+
+
+def _owned(df) -> set:
+    return set(getattr(df, _owned_attr(df), None) or ())
+
+
 def _freed(snap):
     """True once a snapshot's checkpoint blocks/files were released."""
-    return not (
-        getattr(snap, "_dbspark_ckpt_ids", None)
-        or getattr(snap, "_dbspark_ckpt_files", None)
-    )
+    return not _owned(snap)
 
 
 def test_pinned_read_survives_compactions(spark):
@@ -166,9 +175,8 @@ def test_concurrent_checkpoint_ownership_disjoint(spark):
                     spark.range(200).selectExpr(f"id + {i} as v")
                 )
                 dfs.append(df)
-            owned[tag] = set().union(
-                *[getattr(d, "_dbspark_ckpt_ids") for d in dfs]
-            )
+            owned[tag] = set().union(*[_owned(d) for d in dfs])
+            assert len(owned[tag]) >= len(dfs)  # every checkpoint owns some
             for d in dfs:
                 assert d.count() == 200  # own blocks are alive
         except Exception as e:  # noqa: BLE001
@@ -193,11 +201,14 @@ def test_free_never_touches_protected_ids(spark):
     from database_spark.operators import lifecycle as L
 
     snap = L.protected_checkpoint(spark.range(100).selectExpr("id as v"))
-    # pollute another frame's ownership set with the protected id
+    # pollute another frame's ownership set with the protected artifacts
+    # (ids on the local backend, rdd-* dirs on the reliable one)
     victim = L.checkpoint(spark.range(50).selectExpr("id as w"))
-    getattr(victim, "_dbspark_ckpt_ids").update(
-        getattr(snap, "_dbspark_ckpt_ids")
-    )
+    attr = _owned_attr(snap)
+    assert _owned(snap) and _owned_attr(victim) == attr
+    getattr(victim, attr).update(_owned(snap))
     L.free(victim)
-    assert snap.count() == 100  # protected blocks survived the bad free
+    assert snap.count() == 100  # protected artifacts survived the bad free
+    assert _owned(snap)
     L.unprotect_and_free(snap)  # proper rotation still frees them
+    assert _freed(snap)
